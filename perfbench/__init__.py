@@ -1,0 +1,1 @@
+"""ETL benchmark: see README.md in this directory."""
