@@ -45,10 +45,6 @@ from core_etl_spark.session import get_spark  # noqa: E402
 RUNS = 5
 
 
-def _runs_for(name: str) -> int:
-    return RUNS
-
-
 def _family(name: str) -> int:
     """Bench isolation groups, timed in this order: light relational SQL
     first (before anything cache-heavy touches the session), then the
@@ -212,7 +208,7 @@ def main() -> None:
             specs[name].builder(spark, sf_dir).count()
         for name in fam_names:
             per_run = []
-            for _ in range(_runs_for(name)):
+            for _ in range(RUNS):
                 spark.catalog.clearCache()  # operators rebuild their own caches
                 t0 = time.perf_counter()
                 specs[name].builder(spark, sf_dir).count()

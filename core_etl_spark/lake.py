@@ -35,6 +35,7 @@ import atexit
 import os
 import shutil
 import threading
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -245,12 +246,23 @@ class Lake:
           (partition-pruned via the committed leaf-dir listing — one
           listdir per layout level, no data read to decide) and ONLY the
           key columns (column-pruned scan);
-        - the touched-bucket range comes from one 1-row min/max aggregate
-          over the batch (batches are materialized upstream, see
-          ``pipeline.ingest_raw``, so this is a cheap re-scan);
+        - the touched-bucket range follows from ``height_range`` by
+          arithmetic when the caller passes it, else from one 1-row
+          min/max aggregate over the (materialized) batch;
         - during normal forward progress a new chunk lands in buckets that
           do not exist yet, the overlap is empty, and the anti-join is
-          skipped entirely — the common path pays only the 1-row aggregate.
+          skipped entirely;
+        - **footer rule**: with a ``height_range``, the anti-join is also
+          skipped when parquet footer statistics (``_footer_max`` — driver
+          metadata, no job) prove every committed row of the touched
+          buckets sits BELOW ``height_range[0]``. A redelivered row carries
+          its own height, so rows below the batch cannot be copies of it.
+          This is the streaming tail's common case: each one-block batch
+          lands in the half-full tip bucket, above everything in it. The
+          anti-join still runs whenever the proof fails — a file without
+          statistics, a file that cannot be read, or committed rows at or
+          above the batch (a torn group whose sinks committed without the
+          commit marker, or a replayed batch).
 
         At 100 TB the probe cost is O(chunk), never O(table). The
         left-anti join shuffles the bounded batch against the pruned key
@@ -285,6 +297,10 @@ class Lake:
         overlap = [b for b in committed if lo_b <= b <= hi_b]
         if not overlap:
             return out
+        if height_range is not None:
+            maxes = [self._footer_max(name, committed[b]) for b in overlap]
+            if all(m is not None and m < height_range[0] for m in maxes):
+                return out
         keys = list(_NATURAL_KEY[name])
         existing = (
             self.spark.read.parquet(self.path(name))
@@ -318,7 +334,7 @@ class Lake:
 
         ``delivery_verified=True`` asserts the caller ALREADY proved the
         batch covers ``height_range`` contiguously (the streaming tail's
-        rank-window guard constructs exactly ``[last+1, last+n]``), so the
+        contiguity guard admits exactly ``[last+1, last+n]``), so the
         delivery-contiguity probe is skipped — one fewer aggregate job per
         micro-batch on the live path (r16 review). Never pass it for
         provider-fetched chunks: silently skipped heights are precisely
@@ -330,8 +346,26 @@ class Lake:
         thread's checkpoint job (one job materializes the chunk AND
         probes it, overlapped with the previous chunk's ingest), so the
         ingest-path pool here shrinks to the three sink writes. Same
-        math, same marker rules; ``None`` keeps the in-pool probe."""
+        math, same marker rules; ``None`` keeps the in-pool probe. It must
+        lie in ``[lo - 1, hi]`` of ``height_range`` (``lo - 1`` is the
+        vacuous verified prefix); anything else raises ``ValueError``
+        before a row is written.
+
+        The sink jobs run on pool threads that inherit the caller's Spark
+        local properties, so a job group or description set by the caller
+        also tags them."""
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
+        if verified_hi is not None and (
+            height_range is None
+            or not height_range[0] - 1 <= verified_hi <= height_range[1]
+        ):
+            raise ValueError(
+                f"verified_hi={verified_hi} outside height_range={height_range}"
+                " (must lie in [lo - 1, hi])"
+            )
 
         todo = [
             (name, df)
@@ -358,18 +392,24 @@ class Lake:
                 # r16); concurrent, its wall cost hides behind the writes.
                 # It must still COMPLETE before the marker advances.
                 with ThreadPoolExecutor(max_workers=len(todo) + 1) as pool:
-                    verify_fut = (
-                        pool.submit(
-                            self._verified_contiguous_hi, blocks, height_range
+
+                    def submit(fn, *args):
+                        # one copy of the caller's local properties per
+                        # task: Spark stores the object itself, and
+                        # threads sharing it would overwrite each other's
+                        # SQL execution ids
+                        return pool.submit(
+                            inheritable_thread_target(self.spark)(fn), *args
                         )
+
+                    verify_fut = (
+                        submit(self.verified_contiguous_hi, blocks, height_range)
                         if need_marker and not delivery_verified
                         and verified_hi is None
                         else None
                     )
                     futures = [
-                        pool.submit(
-                            self._write_unlocked, name, df, mode, height_range
-                        )
+                        submit(self._write_unlocked, name, df, mode, height_range)
                         for name, df in todo
                     ]
                     for f in futures:
@@ -383,10 +423,15 @@ class Lake:
                 if need_marker and hi is not None:
                     self._advance_commit_marker(hi, lo=height_range[0])
 
-    def _verified_contiguous_hi(
+    def verified_contiguous_hi(
         self, blocks: DataFrame | None, height_range: tuple[int, int]
     ) -> int | None:
-        """Highest height through which THIS chunk's delivery is verifiably
+        """Delivery-contiguity probe, public because two callers run it:
+        ``write_all`` (in its sink pool) and ``pipeline.backfill`` (fused
+        into the prefetch thread's materialization, whose result comes
+        back through ``write_all(verified_hi=...)``).
+
+        Highest height through which THIS chunk's delivery is verifiably
         contiguous (ADVICE r15): ``fetch_blocks`` silently skips heights
         (null/pruned replies, raised transport errors), and advancing the
         group-commit marker to the *requested* hi would make those heights
@@ -926,3 +971,29 @@ class Lake:
         from .operators.maintenance import detect_reorgs
 
         return detect_reorgs(self.blocks(), incoming_headers)
+
+    def block_hashes_at(self, heights: Iterable[int]) -> list[tuple[int, str | None]]:
+        """Stored ``(number, hash)`` pairs at ``heights``: the input of the
+        driver-side fork check (``maintenance.forked_heights``). Reads only
+        the leaf dirs of the buckets that can hold those heights, with an
+        explicit two-column schema (no schema-inference job) and a
+        ``number IN (...)`` filter pushed to the parquet row groups — one
+        small job, never a table scan."""
+        heights = sorted({int(h) for h in heights})
+        if not heights or not self.exists(BLOCKS):
+            return []
+        leaves = self._bucket_leaf_dirs(BLOCKS)
+        dirs = [
+            d
+            for b in sorted({h // self.bucket_size for h in heights})
+            for d in leaves.get(b, [])
+        ]
+        if not dirs:
+            return []
+        rows = (
+            self.spark.read.schema("number long, hash string")
+            .parquet(*dirs)
+            .filter(F.col("number").isin(heights))
+            .collect()
+        )
+        return [(r.number, r.hash) for r in rows]

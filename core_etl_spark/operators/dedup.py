@@ -545,26 +545,6 @@ def minhash_signatures(
     return doc_sh.select("doc_id", sig.alias("sig"))
 
 
-def lsh_buckets(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
-    """Band a *materialized* signature table: bucket key = md5 of the band's
-    minhashes in permutation order — an element-wise slice of the sig array,
-    no shuffle. Docs sharing (band, key) are candidates.
-
-    Only call this on a stored/cached signature table: if ``sig`` is a
-    derived expression, projection collapse re-inlines the whole minhash
-    computation once per band (use :func:`band_buckets` for the fused path).
-    """
-    bands = F.transform(
-        F.sequence(F.lit(0), (F.size("sig") / rows_per_band).cast("int") - 1),
-        lambda b: F.md5(
-            F.array_join(F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band), "|")
-        ),
-    )
-    return signatures.select(
-        "doc_id", F.posexplode(bands).alias("band", "bucket")
-    )
-
-
 def band_buckets(
     doc_sh: DataFrame, n_hashes: int = 12, rows_per_band: int = 4, hash_fn: str = "md5"
 ) -> DataFrame:
@@ -604,27 +584,6 @@ def band_buckets(
 
     bands = F.array(*[_bucket(b) for b in range(n_bands)])
     return doc_sh.select("doc_id", F.posexplode(bands).alias("band", "bucket"))
-
-
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    n_hashes: int = 12,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """LSH candidate pairs: distinct (id_a < id_b) sharing any band bucket."""
-    doc_sh = doc_shingles(df, text_col, id_col, n)
-    buckets = _materialize(band_buckets(doc_sh, n_hashes, rows_per_band))
-    a = buckets.select(F.col("doc_id").alias("id_a"), "band", "bucket")
-    b = buckets.select(F.col("doc_id").alias("id_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def minhash_dedup_pairs(

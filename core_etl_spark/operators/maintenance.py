@@ -6,6 +6,8 @@ lake.Lake` composes these with partition-scoped rewrites.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, functions as F
 
 MATURITY_DEPTH = 5  # reference etl.rs:171,253
@@ -85,6 +87,36 @@ def detect_reorgs(stored_blocks: DataFrame, incoming_headers: DataFrame) -> Data
         .select(F.col("_s_number").alias("forked_number"))
     )
     return same_height.unionByName(parent_mismatch).distinct()
+
+
+def forked_heights(
+    stored: Iterable[tuple[int | None, str | None]],
+    incoming: Iterable[tuple[int | None, str | None, str | None]],
+) -> set[int]:
+    """:func:`detect_reorgs` over driver-side rows, for callers that
+    already hold the headers (the streaming tail collects one micro-batch's
+    headers and the stored ``(number, hash)`` pairs at those heights and
+    their parents). ``stored`` is ``(number, hash)`` pairs, ``incoming``
+    ``(number, hash, parent_hash)`` triples; returns the ``forked_number``
+    set. Same two signals, same NULL semantics: the same-height check is
+    IS DISTINCT FROM (Python ``!=`` treats ``None`` that way), the parent
+    check needs both hashes non-NULL, and a NULL height matches nothing.
+    ``test_forked_heights_matches_detect_reorgs`` pins the equivalence."""
+    by_number: dict[int, list[str | None]] = {}
+    for number, h in stored:
+        if number is not None:
+            by_number.setdefault(number, []).append(h)
+    out: set[int] = set()
+    for number, h, parent in incoming:
+        if number is None:
+            continue
+        if any(h != s for s in by_number.get(number, ())):
+            out.add(number)
+        if parent is not None and any(
+            s is not None and s != parent for s in by_number.get(number - 1, ())
+        ):
+            out.add(number - 1)
+    return out
 
 
 def incremental_agg_merge(

@@ -193,7 +193,7 @@ def backfill(
     # result instead of recomputing it.
     def _materialize(lo: int, hi: int) -> tuple[DataFrame, int | None]:
         raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=False)
-        vhi = lake._verified_contiguous_hi(raw, (lo, hi))
+        vhi = lake.verified_contiguous_hi(raw, (lo, hi))
         return raw, vhi
 
     done = 0

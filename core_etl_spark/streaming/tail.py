@@ -6,17 +6,30 @@ one block at a time: skip stale headers, fetch + normalize + insert, treat an
 insert PK-conflict as a reorg (clean + resync), refresh maturity. Here the
 subscription becomes a *file-based micro-batch source* — a driver-side RPC
 poller (or Kafka topic) lands raw nested block files in a directory and
-``readStream`` tails it with exactly-once checkpointing. Per micro-batch,
-``foreachBatch`` runs the same batch operators the backfill path uses:
+``readStream`` tails it with exactly-once checkpointing, one drop file per
+micro-batch (``maxFilesPerTrigger=1``).
 
-- stale guard (etl.rs:134-136)  → filter ``number > last_saved``;
-- in-batch dedup (the reference's one-at-a-time loop can't see dups;
-  a micro-batch can)                → ``dropDuplicates(["number"])``;
-- reorg check (etl.rs:147-169)     → parent-hash mismatch at height−1
-  (``Lake.detect_reorgs``), then ``clean_block_data`` per forked height and
-  re-ingest of the replacement rows — idempotent bucket rewrite, so a crash
-  between clean and re-insert just re-runs the batch (checkpoint replays it);
-- normalize/decode/write           → T1/T2 + CBC20 extraction + ``Lake.write_all``.
+A micro-batch is a handful of blocks, so the fixed cost of each Spark job
+dominates it. ``foreachBatch`` therefore makes every decision that needs no
+table scan on the driver, over the batch's collected headers:
+
+- materialize the batch once (``localCheckpoint``); the header collect is
+  the action that fills it;
+- in-batch dedup (the reference's one-at-a-time loop can't see dups; a
+  micro-batch can) → per height keep the header another batch row chains
+  to, then the highest hash, NULL hashes last;
+- reorg check (etl.rs:147-169) → ``maintenance.forked_heights`` over the
+  stored ``(number, hash)`` pairs at the batch heights and their parents
+  (``Lake.block_hashes_at``: bucket- and ``number IN``-pruned, one small
+  job), then a truncate from the lowest forked height;
+- stale guard (etl.rs:134-136) → drop heights at or below the group-commit
+  watermark (``Lake.resume_point``);
+- contiguity guard → admit only the run ``last+1, last+2, ...``;
+- normalize/decode/write → ``pipeline.ingest_raw`` over the admitted rows,
+  the same code the backfill runs.
+
+A crash anywhere re-runs the batch from the checkpointed offset; every step
+is idempotent (truncate, stale guard, the lake's redelivery anti-join).
 
 Maturity needs no refresh step at all: it is recomputed at read time
 (``Lake.blocks_with_maturity``), so the reference's tip−10..tip−5 UPDATE
@@ -30,7 +43,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..lake import Lake
-from ..sources.fixtures import raw_blocks  # noqa: F401  (fixture writer below)
 
 #: nested raw-block shape produced by the poller (fixture-compatible)
 RAW_BLOCK_DDL = (
@@ -56,6 +68,38 @@ def stream_raw_blocks(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
+#: row identity inside one materialized micro-batch, so the driver's picks
+#: select exact rows even when a drop repeats a header
+_ROW_ID = "_tail_row_id"
+
+
+def _pick_headers(
+    headers: list[tuple[int, int | None, str | None, str | None]],
+) -> dict[int, tuple[int, str | None, str | None]]:
+    """In-batch dedup over ``(row_id, number, hash, parent_hash)`` rows:
+    one ``number -> (row_id, hash, parent_hash)`` per non-NULL height.
+
+    It must be deterministic: when a micro-batch carries competing headers
+    at one height (dead branch + replacement during a reorg), keep the
+    header some other batch row chains to via ``parent_hash`` (the
+    canonical branch), then the highest hash with NULL hashes last, then the
+    lowest row id, so reruns of the same batch pick the same row. Keeping
+    the stale header would silently pass the same-height fork check. At the
+    batch TIP no child exists to chain from, so a tip-height tie falls to
+    the hash order — deterministic but possibly the dead branch; the next
+    batch's parent-mismatch check then flags it and resyncs. NULL-height
+    rows are dropped here; the stale guard would drop them anyway."""
+    parents = {p for _, _, _, p in headers if p is not None}
+    best: dict[int, tuple] = {}
+    for rid, number, h, parent in headers:
+        if number is None:
+            continue
+        key = (h is not None and h in parents, h is not None, h or "", -rid)
+        if number not in best or key > best[number][0]:
+            best[number] = (key, (rid, h, parent))
+    return {n: row for n, (_, row) in best.items()}
+
+
 def make_tail_batch_processor(
     lake: Lake,
     watch_contracts: tuple[str, ...] = (),
@@ -69,91 +113,63 @@ def make_tail_batch_processor(
             _process_locked(raw)
 
     def _process_locked(raw: DataFrame) -> None:
-        # In-batch dedup must be deterministic: when a micro-batch carries
-        # competing headers at one height (dead-branch + replacement during
-        # a reorg), keep the header some other batch row chains to via
-        # parent_hash (the canonical branch); tie-break on hash so reruns of
-        # the same batch pick the same row. A bare dropDuplicates could keep
-        # the stale header and silently pass the hash-conflict check.
-        # Caveat: at the batch TIP no child exists to chain from, so a tip-
-        # height tie falls through to the hash tie-break — deterministic but
-        # arbitrary, possibly the dead branch. Safe: if the wrong tip wins,
-        # the next batch's parent-mismatch check flags it and resyncs.
-        from pyspark.sql import Window as W
+        from ..operators.maintenance import forked_heights
+        from ..pipeline import ingest_raw
 
-        children = raw.select(F.col("parent_hash").alias("_child_parent")).distinct()
-        w = W.partitionBy("number").orderBy(F.desc("_chained"), F.desc("hash"))
-        raw = (
-            raw.join(children, raw["hash"] == children["_child_parent"], "left")
-            .withColumn("_chained", F.col("_child_parent").isNotNull())
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_child_parent", "_chained", "_rn")
-        )
+        # One job: the header collect fills the lazy checkpoint, so the
+        # sinks, the receipt set and the key probes below all read the
+        # materialized batch instead of re-reading the drop.
+        raw = raw.withColumn(
+            _ROW_ID, F.monotonically_increasing_id()
+        ).localCheckpoint(eager=False)
+        picked = _pick_headers([
+            tuple(r)
+            for r in raw.select(_ROW_ID, "number", "hash", "parent_hash").collect()
+        ])
 
-        # Reorg check first (reference: insert failure → clean + resync,
+        # Reorg check (reference: insert failure → clean + resync,
         # etl.rs:147-169). Everything stored at or above the fork point was
         # built on the dead branch — truncate it, then the replacement rows
         # (and any heights the batch re-delivers) flow through the normal
         # write below; heights the batch doesn't carry re-sync via backfill.
-        headers = raw.select("number", "hash", "parent_hash")
-        forked = [r.forked_number for r in lake.detect_reorgs(headers).collect()]
+        stored = lake.block_hashes_at(
+            {h for n in picked for h in (n, n - 1)}
+        )
+        forked = forked_heights(
+            stored, [(n, h, p) for n, (_, h, p) in picked.items()]
+        )
         if forked:
             fork_point = min(forked)
             tip = lake.latest_block_number()
             if tip >= fork_point:
                 lake.truncate_from_last_saved(tip - fork_point + 1)
 
-        # Stale guard (etl.rs:134-136) keyed on the group-commit watermark
-        # (r15 review): the blocks-derived tip would hide a torn write_all
-        # (blocks committed, transactions not) and filter the replayed
-        # batch to empty, stranding per-sink holes the idempotent append
-        # exists to heal. After a truncate the fork heights are above the
-        # clamped watermark, so they pass it naturally.
+        # Stale guard (etl.rs:134-136) keyed on the group-commit watermark:
+        # the blocks-derived tip would hide a torn write_all (blocks
+        # committed, transactions not) and filter the replayed batch to
+        # empty, stranding per-sink holes the idempotent append exists to
+        # heal. After a truncate the fork heights are above the clamped
+        # watermark, so they pass it naturally.
+        #
+        # Contiguity guard (found by the nb=3000 dirty-chain soak): admit
+        # only the run last+1, last+2, ... Writing past a gap — a boundary
+        # fork just truncated the previous tip, or the subscription dropped
+        # blocks — would advance the watermark beyond a PERMANENT hole that
+        # resume can never see again. Skipped heights are not lost: the
+        # watermark stays at the gap, so the alternating backfill
+        # (run_with_retry's loop, or the next catch-up pass) re-fetches
+        # from exactly there.
         last = lake.resume_point()
-        fresh = raw.filter(F.col("number") > F.lit(last))
-        # Contiguity guard (r15, found by the nb=3000 dirty-chain soak):
-        # write only the contiguous prefix starting at last+1. Writing past
-        # a gap — a boundary fork just truncated the previous tip, or the
-        # subscription dropped blocks — would advance latest_block_number
-        # beyond a PERMANENT hole that resume (O3: start at latest+1) can
-        # never see again. Skipped heights are not lost: the warehouse tip
-        # stays at the gap, so the alternating backfill (run_with_retry's
-        # loop, or the next catch-up pass) re-fetches from exactly there —
-        # the documented repair story, now actually true. The rank window
-        # is a single in-memory pass over one micro-batch (bounded by the
-        # poll cadence), not over the table.
-        fresh = (
-            fresh.withColumn(
-                "_rk", F.row_number().over(W.orderBy("number"))
-            )
-            .filter(F.col("number") == F.col("_rk") + F.lit(last))
-            .drop("_rk")
-        )
-        # Materialize the admitted batch ONCE (r15): three sinks, the
-        # receipt set, and the idempotency key probes all derive from
-        # ``fresh`` — without this each of them re-runs the dedup-window +
-        # guard lineage (the backfill path gets the same treatment from
-        # ``ingest_raw``'s checkpoint). A micro-batch is bounded by the
-        # poll cadence, so the checkpointed partitions are small.
-        fresh = fresh.localCheckpoint(eager=True)
-        n_fresh = fresh.count()
+        n_fresh = 0
+        while last + n_fresh + 1 in picked:
+            n_fresh += 1
         if n_fresh == 0:
             return
-        # The contiguity guard makes the admitted range exactly
-        # [last+1, last+n]: passing it as the write hint lets the
-        # idempotency key probe skip its min/max job per sink (r15).
-        # delivery_verified: the guard CONSTRUCTED the range, so the
-        # lake's own delivery probe would be a redundant aggregate job
-        # per micro-batch on the live path (r16 review).
-        #
-        # The normalize→decode→write slice is ingest_raw — the SAME code
-        # the backfill runs (r16: the tail previously hand-rolled a copy
-        # that lacked the r15 receipts optimizations, so a live tail with
-        # several watched contracts re-ran the full per-tx receipt sweep
-        # once PER CONTRACT and never narrowed it to matched calls).
-        from ..pipeline import ingest_raw
-
+        rids = [picked[last + i][0] for i in range(1, n_fresh + 1)]
+        fresh = raw.filter(F.col(_ROW_ID).isin(rids)).drop(_ROW_ID)
+        # The guard constructed the admitted range [last+1, last+n]:
+        # the write hint lets the key probes derive their buckets without
+        # a job, and delivery_verified skips the lake's contiguity probe.
         ingest_raw(lake, fresh, watch_contracts, receipts_for,
                    pre_materialized=True,
                    height_range=(last + 1, last + n_fresh),

@@ -642,7 +642,12 @@ def test_torn_write_all_healed_by_tail(spark, tmp_path):
     """r15 review: a torn write_all (blocks committed, transactions not)
     must not hide behind the blocks-derived tip — the tail's stale guard
     keys on the group-commit watermark, so the replayed batch re-delivers
-    the torn range and the idempotent append fills the lagging sinks."""
+    the torn range and the idempotent append fills the lagging sinks.
+
+    Second leg, a crash after the writes: all three sinks commit but the
+    marker does not advance, then the batch is replayed. The footer rule
+    in ``_drop_redelivered`` must see committed rows at the batch's own
+    heights and keep the anti-join, or every row would land twice."""
     from core_etl_spark.operators.transforms import (
         normalize_blocks,
         normalize_transactions,
@@ -651,10 +656,13 @@ def test_torn_write_all_healed_by_tail(spark, tmp_path):
 
     control = Lake(spark, str(tmp_path / "control"), bucket_size=10)
     victim = Lake(spark, str(tmp_path / "victim"), bucket_size=10)
-    provider = FixtureBlockProvider(n_blocks=20, txs_per_block=3)
+    provider = FixtureBlockProvider(n_blocks=30, txs_per_block=3)
     P.backfill(spark, control, provider, (FX.WATCH_CONTRACT,), chunk_size=10)
     P.backfill(spark, victim, provider, (FX.WATCH_CONTRACT,), chunk_size=10,
                end=9)
+    tail = make_tail_batch_processor(
+        victim, (FX.WATCH_CONTRACT,), provider.receipts_for
+    )
 
     # torn delivery of 10..19: only the blocks sink commits (no marker —
     # the group never completed)
@@ -664,11 +672,38 @@ def test_torn_write_all_healed_by_tail(spark, tmp_path):
     assert victim.resume_point() == 9          # the watermark does not
 
     # checkpoint replay delivers the same batch to the tail processor
-    make_tail_batch_processor(
-        victim, (FX.WATCH_CONTRACT,), provider.receipts_for
-    )(raw, 0)
-    assert _warehouse_rows(victim) == _warehouse_rows(control)
+    tail(raw, 0)
     assert victim.resume_point() == 19
+
+    # crash after the writes of 20..29: every sink committed (ingest_raw
+    # without a height range advances no marker), then the replay
+    raw = provider.fetch_blocks(spark, 20, 29).localCheckpoint(eager=True)
+    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for,
+                 pre_materialized=True)
+    assert victim.latest_block_number() == 29
+    assert victim.resume_point() == 19
+    tail(raw, 1)
+    assert _warehouse_rows(victim) == _warehouse_rows(control)
+    assert victim.resume_point() == 29
+
+
+def test_write_all_rejects_verified_hi_outside_range(spark, tmp_path):
+    """``verified_hi`` is a verified prefix of ``height_range``: anything
+    outside ``[lo - 1, hi]`` (or with no range at all) is a caller bug and
+    fails before a row is written or the marker moves."""
+    from core_etl_spark.operators.transforms import normalize_blocks
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
+    blocks = normalize_blocks(
+        FixtureBlockProvider(n_blocks=10, txs_per_block=1).fetch_blocks(spark, 0, 9)
+    )
+    for bad, rng in ((10, (0, 9)), (-2, (0, 9)), (5, None)):
+        with pytest.raises(ValueError, match="verified_hi"):
+            lake.write_all(blocks, height_range=rng, verified_hi=bad)
+    assert not lake.exists("blocks")
+    assert lake.resume_point() == -1
+    lake.write_all(blocks, height_range=(0, 9), verified_hi=9)
+    assert lake.resume_point() == 9
 
 
 def test_torn_chunk_healed_by_backfill_resume(spark, tmp_path):

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import time
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -325,6 +325,57 @@ def test_positional_check_matches_sorted_enumerate(spark, values, bucket):
     df = spark.createDataFrame([(v,) for v in values], "number long")
     got = {(r.value, r.pos) for r in positional_check(df, bucket=bucket).collect()}
     assert got == expected
+
+
+_fork_num = st.one_of(st.none(), st.integers(0, 9))
+_fork_hash = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]))
+# one case: stored (number, hash) pairs and incoming (number, hash,
+# parent_hash) headers over ten heights and three hashes, so NULLs,
+# duplicate heights, gaps and parentless heights all come up often
+_fork_case = st.tuples(
+    st.lists(st.tuples(_fork_num, _fork_hash), max_size=12),
+    st.lists(st.tuples(_fork_num, _fork_hash, _fork_hash), max_size=12),
+)
+
+
+@settings(**_SETTINGS)
+@given(st.lists(_fork_case, min_size=1, max_size=12))
+@example([(
+    # duplicate stored height 3 (one NULL hash), a gap at 5, height 7
+    # with no stored parent, a NULL stored height
+    [(2, "a"), (3, "b"), (3, None), (4, "c"), (6, None), (None, "a")],
+    [(3, "b", "a"),      # agrees with one stored 3, not the NULL one
+     (4, None, "b"),     # NULL hash vs stored c: flags 4
+     (4, "c", None),     # NULL parent: unknowable, flags nothing
+     (5, "a", "x"),      # parent 4 disagrees: flags 4
+     (7, "a", "b"),      # stored parent 6 is NULL: nothing
+     (8, "a", "b"),      # no stored parent at all
+     (None, "a", "b")],  # NULL height joins nothing
+)])
+def test_forked_heights_matches_detect_reorgs(spark, cases):
+    """The streaming tail's driver-side fork rule must equal the DataFrame
+    ``detect_reorgs`` exactly, NULL semantics included. Cases are packed
+    into one frame pair, 100 heights apart: both signals only relate
+    ``number`` and ``number - 1``, so cases cannot interact."""
+    from core_etl_spark.operators.maintenance import detect_reorgs, forked_heights
+
+    def shift(n, k):
+        return None if n is None else n + 100 * k
+
+    stored = [(shift(n, k), h) for k, (st_, _) in enumerate(cases) for n, h in st_]
+    incoming = [
+        (shift(n, k), h, p) for k, (_, inc) in enumerate(cases) for n, h, p in inc
+    ]
+    expected = {
+        r.forked_number
+        for r in detect_reorgs(
+            spark.createDataFrame(stored, "number long, hash string"),
+            spark.createDataFrame(
+                incoming, "number long, hash string, parent_hash string"
+            ),
+        ).collect()
+    }
+    assert forked_heights(stored, incoming) == expected
 
 
 def test_lake_concurrent_mutations_lose_no_committed_rows(spark, tmp_path):

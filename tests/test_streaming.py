@@ -399,3 +399,40 @@ def test_tail_receipts_fetched_once_and_narrowed(spark, tmp_path):
     proc(raw, 0)
     assert calls == {"n": 1, "hinted": 1}
     assert lake.token_transfers().count() > 0
+
+
+def test_tail_one_block_batch_job_budget(spark, tmp_path):
+    """A one-block micro-batch on a half-full bucket runs at most 12 Spark
+    jobs: every per-batch decision (dedup, fork rule, stale and contiguity
+    guards) is made on the driver over collected headers, the stored
+    hashes are read from the batch's heights only, and the sinks skip the
+    redelivery anti-join because footer statistics show every committed
+    row sits below the batch. It ran 29 jobs when the fork check and the
+    key probes scanned whole tables; a return to those fails here."""
+    from core_etl_spark.pipeline import backfill
+    from core_etl_spark.sources.provider import FixtureBlockProvider
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=40)
+    provider = FixtureBlockProvider(n_blocks=21, txs_per_block=3)
+    backfill(spark, lake, provider, (FX.WATCH_CONTRACT,), end=19, chunk_size=20)
+    drop = str(tmp_path / "drop")
+    _drop(FX.raw_blocks(spark, n_blocks=21, txs_per_block=3)
+          .filter(F.col("number") == 20), drop)
+    batch = spark.read.schema(TL.RAW_BLOCK_DDL).parquet(drop)
+    proc = TL.make_tail_batch_processor(
+        lake, (FX.WATCH_CONTRACT,), provider.receipts_for
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("tail-job-budget", "one-block tail batch")
+    try:
+        proc(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("tail-job-budget")
+    assert lake.resume_point() == 20
+    assert lake.blocks().count() == 21
+    # the header collect and the three sink writes are in the group, so
+    # the count covers the write pool's threads too
+    assert 4 <= len(jobs) <= 12, sorted(jobs)
