@@ -320,36 +320,28 @@ class Lake:
         blocks: DataFrame | None = None,
         transactions: DataFrame | None = None,
         token_transfers: DataFrame | None = None,
-        mode: str = "append",
         height_range: tuple[int, int] | None = None,
-        delivery_verified: bool = False,
         verified_hi: int | None = None,
     ) -> None:
-        """Write up to three modules as CONCURRENT Spark jobs: the sinks are
-        independent (separate directories), so serializing them leaves the
-        cluster idle during each job's commit phase. Wall time per batch is
-        max(write) instead of sum(write); inputs must derive from a
-        materialized batch (see ``pipeline.ingest_raw``) so the concurrent
-        jobs don't race to recompute shared lineage.
+        """Append up to three modules as one group of CONCURRENT Spark jobs:
+        the sinks are independent (separate directories), so serializing
+        them leaves the cluster idle during each job's commit phase. Wall
+        time per batch is max(write) instead of sum(write); inputs must
+        derive from a materialized batch (see ``pipeline.ingest_raw``) so
+        the concurrent jobs don't race to recompute shared lineage.
 
-        ``delivery_verified=True`` asserts the caller ALREADY proved the
-        batch covers ``height_range`` contiguously (the streaming tail's
-        contiguity guard admits exactly ``[last+1, last+n]``), so the
-        delivery-contiguity probe is skipped — one fewer aggregate job per
-        micro-batch on the live path (r16 review). Never pass it for
-        provider-fetched chunks: silently skipped heights are precisely
-        what the probe exists to catch.
-
-        ``verified_hi`` (r17): the probe's PRECOMPUTED result, for callers
-        that already ran the exact contiguity aggregate over the
-        materialized chunk — the backfill loop fuses it into the prefetch
-        thread's checkpoint job (one job materializes the chunk AND
-        probes it, overlapped with the previous chunk's ingest), so the
-        ingest-path pool here shrinks to the three sink writes. Same
-        math, same marker rules; ``None`` keeps the in-pool probe. It must
-        lie in ``[lo - 1, hi]`` of ``height_range`` (``lo - 1`` is the
-        vacuous verified prefix); anything else raises ``ValueError``
-        before a row is written.
+        The one commit rule: the CALLER proves delivery, the lake only
+        applies the gap-refusing advance. ``verified_hi`` is the highest
+        height through which the caller verified this group's delivery
+        contiguous (the backfill and the repair probe the materialized
+        chunk; the streaming tail's contiguity guard constructs its
+        admitted range). Once every sink
+        committed, the group-commit marker advances to it. It must lie in
+        ``[lo - 1, hi]`` of ``height_range`` (``lo - 1`` is the vacuous
+        verified prefix); anything else raises ``ValueError`` before a row
+        is written. Without it the rows are written and the marker stays
+        put — the safe under-advance: resume re-delivers the range and the
+        idempotent append absorbs it.
 
         The sink jobs run on pool threads that inherit the caller's Spark
         local properties, so a job group or description set by the caller
@@ -376,110 +368,28 @@ class Lake:
             )
             if df is not None
         ]
+        if not todo:
+            return
         # One mutex hold around the whole group: the sinks stay concurrent
         # with each other (workers run the lock-free body) while the group as
         # a unit serializes against compact/retention stage-and-swap.
-        need_marker = bool(todo) and mode == "append" and height_range is not None
         self._ensure_writer_lock()
         with self.mutex:
-            if len(todo) == 1 and not need_marker:
-                self._write_unlocked(todo[0][0], todo[0][1], mode, height_range)
-            else:
-                # The delivery-contiguity probe (one 1-row aggregate over
-                # the materialized chunk) rides the SAME pool as the sink
-                # writes — a sequential probe added one driver-scheduled
-                # job per chunk to the hot ingest path (bench o1 +20%,
-                # r16); concurrent, its wall cost hides behind the writes.
-                # It must still COMPLETE before the marker advances.
-                with ThreadPoolExecutor(max_workers=len(todo) + 1) as pool:
-
-                    def submit(fn, *args):
-                        # one copy of the caller's local properties per
-                        # task: Spark stores the object itself, and
-                        # threads sharing it would overwrite each other's
-                        # SQL execution ids
-                        return pool.submit(
-                            inheritable_thread_target(self.spark)(fn), *args
-                        )
-
-                    verify_fut = (
-                        submit(self.verified_contiguous_hi, blocks, height_range)
-                        if need_marker and not delivery_verified
-                        and verified_hi is None
-                        else None
+            with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+                # one copy of the caller's local properties per task: Spark
+                # stores the object itself, and threads sharing it would
+                # overwrite each other's SQL execution ids
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(self.spark)(self._write_unlocked),
+                        name, df, "append", height_range,
                     )
-                    futures = [
-                        submit(self._write_unlocked, name, df, mode, height_range)
-                        for name, df in todo
-                    ]
-                    for f in futures:
-                        f.result()
-                    if verify_fut is not None:
-                        hi = verify_fut.result()
-                    elif need_marker and verified_hi is not None and not delivery_verified:
-                        hi = verified_hi
-                    else:
-                        hi = height_range[1] if need_marker else None
-                if need_marker and hi is not None:
-                    self._advance_commit_marker(hi, lo=height_range[0])
-
-    def verified_contiguous_hi(
-        self, blocks: DataFrame | None, height_range: tuple[int, int]
-    ) -> int | None:
-        """Delivery-contiguity probe, public because two callers run it:
-        ``write_all`` (in its sink pool) and ``pipeline.backfill`` (fused
-        into the prefetch thread's materialization, whose result comes
-        back through ``write_all(verified_hi=...)``).
-
-        Highest height through which THIS chunk's delivery is verifiably
-        contiguous (ADVICE r15): ``fetch_blocks`` silently skips heights
-        (null/pruned replies, raised transport errors), and advancing the
-        group-commit marker to the *requested* hi would make those heights
-        permanent holes — ``resume_point`` starts past them and the
-        idempotent anti-join can only heal ranges that get re-delivered.
-        Mirrors the streaming tail's contiguity guard: verify the delivered
-        block numbers cover ``[lo, hi]`` with one 1-row aggregate over the
-        (already materialized) chunk; on a gap, advance only to the prefix
-        before the first missing height so the next resume re-fetches it.
-        Returns ``None`` only when there is no delivery evidence at all (no
-        blocks frame in the group). When the chunk's FIRST height is the
-        missing one (or nothing was delivered), it returns ``lo - 1`` — the
-        vacuous verified prefix — rather than ``None``: on a marker-less
-        warehouse (fresh bootstrap, pre-marker legacy) a ``None`` would
-        leave no marker file at all and ``resume_point`` would fall back to
-        the blocks TIP, silently skipping the hole forever (r16 review).
-        ``lo - 1`` is uniformly safe: with an existing marker the frontier
-        rule reduces it to a no-op, and on bootstrap it pins resume at the
-        hole."""
-        if blocks is None:
-            return None  # no delivery evidence — keep the old watermark
-        lo, hi = height_range
-        nums = blocks.select(F.col("number")).filter(
-            F.col("number").between(lo, hi)
-        )
-        row = nums.agg(
-            F.countDistinct("number").alias("cnt"),
-            F.min("number").alias("mn"),
-            F.max("number").alias("mx"),
-        ).first()
-        if row is None or row["cnt"] == 0 or row["mn"] != lo:
-            return lo - 1
-        if row["cnt"] == hi - lo + 1:
-            return hi  # common path: one cheap aggregate, full range verified
-        # Gap somewhere in (lo, hi]: find the first missing height with one
-        # bounded anti-join (chunk-sized range frame vs chunk-sized key set —
-        # O(chunk), never O(table)).
-        missing = (
-            self.spark.range(lo, hi + 1)
-            .withColumnRenamed("id", "number")
-            .join(nums, on="number", how="left_anti")
-            .agg(F.min("number").alias("m"))
-            .first()
-        )
-        first_gap = missing["m"] if missing is not None else None
-        if first_gap is None:
-            return hi
-        return int(first_gap) - 1 if first_gap > lo else None
+                    for name, df in todo
+                ]
+                for f in futures:
+                    f.result()
+            if verified_hi is not None:
+                self._advance_commit_marker(verified_hi, height_range[0])
 
     # --- group-commit watermark (r15 review) ------------------------------------
     #
@@ -492,8 +402,8 @@ class Lake:
     # torn range is always re-delivered (and the anti-join absorbs the
     # already-committed sinks). Atomic tmp+rename under the lake mutex;
     # height-removing mutations clamp it back. A marker-less warehouse
-    # (pre-r15, or ad-hoc writes without a height_range) falls back to the
-    # legacy blocks-tip resume.
+    # (pre-r15, or ad-hoc writes without a ``verified_hi``) falls back to
+    # the legacy blocks-tip resume.
 
     def _marker_path(self) -> str:
         return os.path.join(self.root, "_ingest_commit")
@@ -516,20 +426,19 @@ class Lake:
             _json.dump({"hi": int(hi)}, f)
         os.replace(tmp, self._marker_path())
 
-    def _advance_commit_marker(self, hi: int, lo: int | None = None) -> None:
-        """Advance the watermark to ``hi`` — but never ACROSS a gap: when
-        the caller supplies the verified range's ``lo``, the advance is
-        refused if ``lo > marker + 1`` (r16 self-review: a hole in chunk N
-        made that chunk advance only to the verified prefix, but chunk
-        N+1's blind max-advance then papered over the hole permanently —
-        the exact defect the contiguity guard exists to prevent, one
-        chunk later). A refused advance is not lost progress: resume
-        re-fetches from the marker, the already-committed heights above
-        the hole dedup via the anti-join, and the re-delivered chunks
-        re-advance the marker chunk by chunk. ``lo=None`` (legacy callers,
-        marker-less bootstrap) keeps the plain max semantics."""
+    def _advance_commit_marker(self, hi: int, lo: int) -> None:
+        """Advance the watermark to ``hi`` — but never ACROSS a gap: the
+        advance is refused if the verified range's ``lo > marker + 1``
+        (r16 self-review: a hole in chunk N made that chunk advance only to
+        the verified prefix, but chunk N+1's blind max-advance then papered
+        over the hole permanently — the exact defect the contiguity guard
+        exists to prevent, one chunk later). A refused advance is not lost
+        progress: resume re-fetches from the marker, the already-committed
+        heights above the hole dedup via the anti-join, and the
+        re-delivered chunks re-advance the marker chunk by chunk. A
+        marker-less warehouse (fresh bootstrap) takes ``hi`` as is."""
         prev = self._read_marker()
-        if prev is not None and lo is not None and lo > prev + 1:
+        if prev is not None and lo > prev + 1:
             return
         if prev is None or hi > prev:
             self._write_marker(hi)
@@ -613,7 +522,9 @@ class Lake:
 
     # --- resume / tip (O3, Q1) ---------------------------------------------------
 
-    def _bucket_leaf_dirs(self, name: str) -> dict[int, list[str]]:
+    def _bucket_leaf_dirs(
+        self, name: str, base: str | None = None
+    ) -> dict[int, list[str]]:
         """Committed ``block_bucket=*`` leaf dirs keyed by bucket value,
         from the partition layout alone — one ``listdir`` per layout level
         (the local-FS stand-in for a metastore ``SHOW PARTITIONS``), never a
@@ -621,8 +532,9 @@ class Lake:
         (``_temporary`` task-attempt trees, ``_SUCCESS``, dotfiles) are
         pruned at every level, mirroring Hadoop's hiddenFileFilter — an
         in-flight or crashed write must not leak uncommitted partitions
-        into tip/resume/truncate decisions."""
-        parents = [self.path(name)]
+        into tip/resume/truncate decisions. ``base`` lists a stage dir
+        written with ``name``'s layout instead of the table itself."""
+        parents = [base or self.path(name)]
         for col in _PARTITION_COLS[name][:-1]:
             nxt: list[str] = []
             for p in parents:
@@ -773,37 +685,21 @@ class Lake:
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    @staticmethod
-    def _leaf_partition_dirs(base: str) -> list[str]:
-        """Relative paths of every committed partition leaf dir holding
-        parquet files. Hidden subtrees (``_temporary``, dotdirs) are pruned
-        so an in-flight write's task-attempt dirs can never be swapped in as
-        if they were committed partitions."""
-        out = []
-        for dirpath, dirnames, filenames in os.walk(base):
-            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-            if any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for f in filenames
-            ):
-                out.append(os.path.relpath(dirpath, base))
-        return out
-
     def _swap_buckets(self, name: str, stage: str, buckets: set[int]) -> None:
         """Replace every affected bucket's leaf dir with its staged rewrite;
         affected buckets absent from the stage became empty → dropped (the
         local-FS stand-in for ``ALTER TABLE DROP PARTITION``)."""
         target = self.path(name)
-        affected = {f"block_bucket={b}" for b in buckets}
-        for rel in self._leaf_partition_dirs(target):
-            if os.path.basename(rel) in affected:
-                shutil.rmtree(os.path.join(target, rel), ignore_errors=True)
-        for rel in self._leaf_partition_dirs(stage):
-            if os.path.basename(rel) in affected:
-                dst = os.path.join(target, rel)
+        committed = self._bucket_leaf_dirs(name)
+        staged = self._bucket_leaf_dirs(name, stage)
+        for b in buckets:
+            for d in committed.get(b, []):
+                shutil.rmtree(d, ignore_errors=True)
+            for src in staged.get(b, []):
+                dst = os.path.join(target, os.path.relpath(src, stage))
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 shutil.rmtree(dst, ignore_errors=True)
-                shutil.move(os.path.join(stage, rel), dst)
+                shutil.move(src, dst)
 
     # --- reorg cleanup (K7) --------------------------------------------------------
 

@@ -17,6 +17,8 @@ IEEE-deterministic double expression over exact inputs.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 _DEC = "decimal(10,3)"
@@ -46,6 +48,10 @@ _ACC = "decimal(28,6)"
 import os as _os
 
 VEC_ARITH = _os.environ.get("SPARK_GRAFT_VEC_ARITH", "decimal")
+if VEC_ARITH not in ("decimal", "int64"):
+    raise ValueError(
+        f"SPARK_GRAFT_VEC_ARITH must be decimal or int64, got {VEC_ARITH!r}"
+    )
 
 #: millis scale: decimal(10,3) ↔ int64 conversion factor (3 dp exact)
 _SCALE = 1000
@@ -68,8 +74,6 @@ def _vec(v: Column) -> Column:
             lambda x: (F.round(x.cast("double"), 3).cast(_DEC) * _SCALE)
             .cast("long"),
         )
-    if VEC_ARITH != "decimal":
-        raise ValueError(f"VEC_ARITH must be decimal or int64, got {VEC_ARITH!r}")
     return _dec_vec(v)
 
 
@@ -849,6 +853,12 @@ def ivf_index_topk(
 # rankings are bit-identical across engines (the l28 oracle replays them).
 
 
+def _millis(c) -> int:
+    """A codebook word coordinate as exact int64 millis: the value the
+    decimal path's ``F.lit(str(c)).cast(_DEC)`` holds, × 1000."""
+    return int(Decimal(str(c)).quantize(Decimal("0.001"), ROUND_HALF_UP) * _SCALE)
+
+
 def _subdist(sub: Column, centroid_lits: list) -> Column:
     """Exact squared L2 between a subvector column and a constant
     centroid in the ACTIVE representation: (x-c)² terms, order-stable
@@ -857,11 +867,13 @@ def _subdist(sub: Column, centroid_lits: list) -> Column:
     ORDER distances (argmin/ADC ranking) use it directly (the ordering
     is the decimal ordering, scale is a positive constant); callers
     that need the decimal VALUE convert once via
-    :func:`_millis_sq_to_dec`. Codebook words are stored as 3-dp
-    Decimals, so the ×1000 int conversion here is exact."""
+    :func:`_millis_sq_to_dec`. Words convert through ``Decimal(str(c))``
+    rounded half-up to 3 dp, exactly as the decimal path casts its
+    ``str(c)`` literal, so float words agree too (``int(1.005 * 1000)``
+    would truncate to 1004)."""
     if VEC_ARITH == "int64":
         cent = F.array(
-            *[F.lit(int(c * _SCALE)).cast("long") for c in centroid_lits]
+            *[F.lit(_millis(c)).cast("long") for c in centroid_lits]
         )
         terms = F.zip_with(sub, cent, lambda x, c: (x - c) * (x - c))
         return F.aggregate(terms, F.lit(0).cast("long"), lambda a, x: a + x)
@@ -936,8 +948,6 @@ def pq_codebooks_kmeans(
     doubles (bytes). Downstream (encode / ADC) is unchanged — only the
     constant tables differ, exactly like ``kmeans_centroids`` vs first-K
     for IVF."""
-    from decimal import Decimal
-
     from pyspark.ml.functions import array_to_vector
 
     corpus, _ = valid_vectors(corpus, vec_col)  # see kmeans_centroids
@@ -1397,8 +1407,6 @@ def read_pq_codebooks(spark, path: str) -> list[list[list]]:
     """Rehydrate persisted codebooks (m × ksub rows — bytes) into the
     in-memory shape every PQ entry point consumes. Words were written as
     exact decimal strings, so the round-trip is lossless."""
-    from decimal import Decimal
-
     rows = spark.read.parquet(f"{path}/codebooks").collect()
     m = max(r.sub for r in rows) + 1
     ksub = max(r.code for r in rows) + 1

@@ -29,13 +29,15 @@ def normalize_blocks(raw: DataFrame) -> DataFrame:
     from the fixture/RPC reader; u256s stay strings (SURVEY §1.2).
 
     ROW-PRESERVING BY CONTRACT (r16 review, pinned by
-    tests/test_etl.py::test_normalize_blocks_is_row_preserving): the
-    streaming tail's ``delivery_verified=True`` marker advance rests on
-    "the contiguity guard proved ``fresh`` covers [last+1, last+n], and
-    the written blocks frame is normalize_blocks(fresh)". Adding ANY
-    filter here (e.g. dropping NULL-hash rows) would let the marker
-    claim heights whose block rows were never written — the permanent
-    resume-past-a-hole defect. Malformed-row handling belongs in the
+    tests/test_etl.py::test_normalize_blocks_is_row_preserving): every
+    ingest caller proves delivery over the RAW batch and hands the
+    result to ``Lake.write_all(verified_hi=...)`` — the backfill and the
+    repair probe the raw chunk's heights, the streaming tail's contiguity
+    guard admits exactly [last+1, last+n] — while the written blocks
+    frame is normalize_blocks(raw). Adding ANY filter here (e.g.
+    dropping NULL-hash rows) would let the marker claim heights whose
+    block rows were never written — the permanent resume-past-a-hole
+    defect. Malformed-row handling belongs in the
     providers (wire normalization) or downstream sweeps
     (unverifiable_blocks), never in this projection."""
     cols = [f.name for f in BLOCK_SCHEMA.fields]

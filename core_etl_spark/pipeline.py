@@ -64,25 +64,23 @@ def ingest_raw(
     raw: DataFrame,
     watch_contracts: tuple[str, ...] = (),
     receipts_for: Callable[[DataFrame], DataFrame] | None = None,
-    pre_materialized: bool = False,
     height_range: tuple[int, int] | None = None,
-    delivery_verified: bool = False,
     verified_hi: int | None = None,
 ) -> None:
-    """Normalize one batch of raw nested blocks and write all modules.
+    """Normalize one batch of raw nested blocks and write all modules as
+    one ``Lake.write_all`` group, which advances the commit marker to
+    ``verified_hi`` (the caller's proof of delivery; see there).
 
-    The raw batch is materialized ONCE (eager ``localCheckpoint``) before
-    fan-out: three sinks (+ the receipt set) all derive from it, and without
-    materialization each write job re-runs the whole upstream fetch/generate
-    lineage — measured 5 recomputes per chunk. A chunk is bounded by
+    ``raw`` must already be materialized (a ``localCheckpoint``): three
+    sinks (+ the receipt set) all derive from it, and without
+    materialization each write job re-runs the whole upstream
+    fetch/generate lineage — measured 5 recomputes per chunk. The backfill
+    and the repair materialize through :func:`fetch_verified`, the
+    streaming tail through its header collect. A chunk is bounded by
     ``chunk_size``, so the checkpointed partitions fit executor storage
     (MEMORY_AND_DISK) at any table size. (Plain ``.cache()`` was measured
     slower here: lazy population taxes the first write job instead of
-    paying one dedicated job up front.) ``pre_materialized=True`` skips the
-    checkpoint when the caller already materialized the batch (the
-    prefetching backfill loop)."""
-    if not pre_materialized:
-        raw = raw.localCheckpoint(eager=True)
+    paying one dedicated job up front.)"""
     blocks = normalize_blocks(raw)
     txs = normalize_transactions(raw)
     transfers = None
@@ -128,20 +126,70 @@ def ingest_raw(
             .withColumnRenamed("_ca", "created_at")
             .drop("_bn")
         )
-    # height_range: the backfill loop knows each chunk's [lo, hi] exactly —
+    # height_range: the caller knows each batch's [lo, hi] exactly —
     # passing it lets the idempotency key probe derive the touched buckets
     # arithmetically instead of running a min/max job per sink (r15).
-    # delivery_verified: the streaming tail's contiguity guard CONSTRUCTS
-    # its admitted range as [last+1, last+n], so it passes True to skip
-    # the lake's redundant delivery probe (r16: the tail now routes
-    # through this function instead of a hand-rolled copy).
-    # verified_hi: the delivery-contiguity probe's precomputed result when
-    # the caller fused it into the chunk's materialization job (the
-    # backfill prefetch thread, r17) — write_all then runs only the three
-    # sink writes, no probe job on the ingest path.
     lake.write_all(blocks, txs, transfers, height_range=height_range,
-                   delivery_verified=delivery_verified,
                    verified_hi=verified_hi)
+
+
+def verified_contiguous_hi(raw: DataFrame, height_range: tuple[int, int]) -> int:
+    """Highest height through which THIS chunk's delivery is verifiably
+    contiguous (ADVICE r15): ``fetch_blocks`` silently skips heights
+    (null/pruned replies, raised transport errors), and advancing the
+    group-commit marker to the *requested* hi would make those heights
+    permanent holes — ``resume_point`` starts past them and the
+    idempotent anti-join can only heal ranges that get re-delivered.
+    Mirrors the streaming tail's contiguity guard: verify the delivered
+    block numbers cover ``[lo, hi]`` with one 1-row aggregate over the
+    chunk; on a gap, return only the prefix before the first missing
+    height so the next resume re-fetches it.
+
+    When the chunk's FIRST height is the missing one (or nothing was
+    delivered), it returns ``lo - 1`` — the vacuous verified prefix: on a
+    marker-less warehouse (fresh bootstrap, pre-marker legacy) no marker
+    at all would make ``resume_point`` fall back to the blocks TIP,
+    silently skipping the hole forever (r16 review). ``lo - 1`` is
+    uniformly safe: with an existing marker the frontier rule reduces it
+    to a no-op, and on bootstrap it pins resume at the hole.
+
+    Probing raw ``number``s is sound because ``normalize_blocks`` is
+    row-preserving by contract (its docstring +
+    ``test_normalize_blocks_is_row_preserving``): the probe sees exactly
+    the heights the blocks sink will write."""
+    lo, hi = height_range
+    nums = raw.select(F.col("number")).filter(F.col("number").between(lo, hi))
+    row = nums.agg(
+        F.countDistinct("number").alias("cnt"),
+        F.min("number").alias("mn"),
+    ).first()
+    if row["cnt"] == 0 or row["mn"] != lo:
+        return lo - 1
+    if row["cnt"] == hi - lo + 1:
+        return hi  # common path: one cheap aggregate, full range verified
+    # Gap somewhere in (lo, hi]: find the first missing height with one
+    # bounded anti-join (chunk-sized range frame vs chunk-sized key set —
+    # O(chunk), never O(table)).
+    first_gap = (
+        raw.sparkSession.range(lo, hi + 1)
+        .withColumnRenamed("id", "number")
+        .join(nums, on="number", how="left_anti")
+        .agg(F.min("number").alias("m"))
+        .first()["m"]
+    )
+    return int(first_gap) - 1
+
+
+def fetch_verified(
+    spark: SparkSession, provider, lo: int, hi: int
+) -> tuple[DataFrame, int]:
+    """Fetch ``[lo, hi]`` and materialize it with a lazy
+    ``localCheckpoint`` whose filling action is the contiguity probe: one
+    job materializes the chunk AND yields the ``verified_hi`` that
+    ``ingest_raw`` hands to ``Lake.write_all``, so the ingest path runs
+    only the sink writes."""
+    raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=False)
+    return raw, verified_contiguous_hi(raw, (lo, hi))
 
 
 def backfill(
@@ -180,34 +228,20 @@ def backfill(
     # granularity is unchanged (a chunk still commits before the next one
     # starts ingesting).
     #
-    # r17: the delivery-contiguity probe (the exact countDistinct/min/max
-    # aggregate write_all used to run as a fourth concurrent job per
-    # chunk) is FUSED into the materialization: the checkpoint goes lazy
-    # and the probe aggregate is the action that populates its blocks —
-    # one job does checkpoint + probe, and it runs on the prefetch thread,
-    # overlapped with the previous chunk's sink writes. Sound because
-    # normalize_blocks is row-preserving by contract (its docstring +
-    # test_normalize_blocks_is_row_preserving): probing raw ``number``s
-    # sees exactly the heights the blocks sink will write. Same math,
-    # same gap-refusing marker rules — write_all just receives the
-    # result instead of recomputing it.
-    def _materialize(lo: int, hi: int) -> tuple[DataFrame, int | None]:
-        raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=False)
-        vhi = lake.verified_contiguous_hi(raw, (lo, hi))
-        return raw, vhi
-
+    # Each chunk materializes through fetch_verified — checkpoint and
+    # contiguity probe in one job on the prefetch thread, overlapped with
+    # the previous chunk's sink writes.
     done = 0
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_materialize, *chunks[0])
+        fut = pool.submit(fetch_verified, spark, provider, *chunks[0])
         for i, (lo, hi) in enumerate(chunks):
             raw, vhi = fut.result()
             if i + 1 < len(chunks):
-                fut = pool.submit(_materialize, *chunks[i + 1])
+                fut = pool.submit(fetch_verified, spark, provider, *chunks[i + 1])
             ingest_raw(lake, raw, watch_contracts, receipts_for,
-                       pre_materialized=True, height_range=(lo, hi),
-                       verified_hi=vhi)
+                       height_range=(lo, hi), verified_hi=vhi)
             done += hi - lo + 1
             log.info("backfill: synced %d..%d (%d/%d)", lo, hi, done,
                      tip - start + 1)
@@ -303,9 +337,9 @@ def repair_unverifiable_blocks(
     lake.clean_blocks(flagged)
     receipts_for = getattr(provider, "receipts_for", None)
     for lo, hi in _contiguous_ranges(flagged):
-        raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=True)
+        raw, vhi = fetch_verified(spark, provider, lo, hi)
         ingest_raw(lake, raw, watch_contracts, receipts_for,
-                   pre_materialized=True, height_range=(lo, hi))
+                   height_range=(lo, hi), verified_hi=vhi)
     return len(flagged)
 
 

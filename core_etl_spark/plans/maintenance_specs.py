@@ -1754,7 +1754,7 @@ def o1d(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
             n = backfill(spark, lake, provider, (WATCH_CONTRACT,), chunk_size=150)
             redelivered = 0
             for lo, hi in ((100, 249), (150, 299)):
-                raw = provider.fetch_blocks(spark, lo, hi)
+                raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=True)
                 ingest_raw(lake, raw, (WATCH_CONTRACT,), provider.receipts_for)
                 redelivered += hi - lo + 1
             epoch = F.col("created_at").cast("long")

@@ -167,13 +167,12 @@ def make_tail_batch_processor(
             return
         rids = [picked[last + i][0] for i in range(1, n_fresh + 1)]
         fresh = raw.filter(F.col(_ROW_ID).isin(rids)).drop(_ROW_ID)
-        # The guard constructed the admitted range [last+1, last+n]:
-        # the write hint lets the key probes derive their buckets without
-        # a job, and delivery_verified skips the lake's contiguity probe.
+        # The guard constructed the admitted range [last+1, last+n], so it
+        # is both the write hint (the key probes derive their buckets
+        # without a job) and the verified height the marker advances to.
         ingest_raw(lake, fresh, watch_contracts, receipts_for,
-                   pre_materialized=True,
                    height_range=(last + 1, last + n_fresh),
-                   delivery_verified=True)
+                   verified_hi=last + n_fresh)
 
     return process
 

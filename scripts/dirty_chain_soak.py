@@ -84,7 +84,7 @@ def main() -> None:
 
         t0 = time.monotonic()
         lo, hi = redeliver[0], redeliver[1] - 1
-        raw = provider.fetch_blocks(spark, lo, hi)
+        raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=True)
         ingest_raw(victim, raw, (WATCH_CONTRACT,), provider.receipts_for)
         rec["redeliver_s"] = round(time.monotonic() - t0, 1)
         print(f"leg2 redelivery {lo}..{hi}: {rec['redeliver_s']}s", flush=True)

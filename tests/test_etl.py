@@ -427,9 +427,10 @@ def test_load_tables_view_follows_sf_dir(spark, tmp_path):
 
 
 def test_normalize_blocks_is_row_preserving(spark):
-    """r16 review pin: the streaming tail advances the commit marker with
-    delivery_verified=True on the strength of its contiguity guard over
-    the RAW batch — sound only while normalize_blocks never drops a row.
+    """r16 review pin: every ingest caller passes write_all a verified_hi
+    proved over the RAW batch (the backfill's contiguity probe, the
+    streaming tail's contiguity guard) — sound only while normalize_blocks
+    never drops a row.
     Exercised on the DIRTY fixture (NULL hashes, NULL transactions,
     malformed fields): every raw row must yield exactly one block row."""
     from core_etl_spark.operators.transforms import normalize_blocks

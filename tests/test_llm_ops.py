@@ -2220,6 +2220,25 @@ def test_first_k_centroids_probe_is_preshuffle(spark, sf_dir):
     assert cents.count() == 16  # dense ids 0..15 all valid at this sf
 
 
+def test_vec_arith_env_checked_at_import(monkeypatch):
+    """ADVICE r17: an unknown ``SPARK_GRAFT_VEC_ARITH`` fails loudly when
+    the module loads, not at the first query that reaches ``_vec``. The
+    module's namespace is restored afterwards, so every other test keeps
+    the original function and exception objects."""
+    import importlib
+
+    saved = dict(vars(S))
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_VEC_ARITH", "int64")
+        assert importlib.reload(S).VEC_ARITH == "int64"
+        monkeypatch.setenv("SPARK_GRAFT_VEC_ARITH", "float32")
+        with pytest.raises(ValueError, match="'float32'"):
+            importlib.reload(S)
+    finally:
+        vars(S).clear()
+        vars(S).update(saved)
+
+
 def test_vec_arith_modes_identical(spark, sf_dir, tmp_path):
     """r17 (VERDICT r16 directive 5): the scaled-int64 hot loop must be
     BIT-IDENTICAL to the decimal(10,3) arithmetic on every similarity
@@ -2237,6 +2256,20 @@ def test_vec_arith_modes_identical(spark, sf_dir, tmp_path):
     def snap(df):
         return sorted(map(tuple, df.collect()))
 
+    # caller-supplied float codebook words: both modes must read -1.005
+    # as -1005 millis, where a bare ``int(c * 1000)`` truncates it to
+    # -1004, and round a non-3-dp word (-3.0149999999999997) half-up as
+    # the decimal cast does
+    assert int(-1.005 * 1000) == -1004
+    wide = spark.createDataFrame(
+        [(i, [2.675 + i, -1.005 * (i + 1)]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    float_books = [
+        [[2.675 + i] for i in range(4)],
+        [[-1.005 * (i + 1)] for i in range(4)],
+    ]
+
     old = S.VEC_ARITH
     results = {}
     try:
@@ -2247,6 +2280,9 @@ def test_vec_arith_modes_identical(spark, sf_dir, tmp_path):
                 "lsh": snap(S.lsh_ann_topk(emb, queries, k=5)),
                 "ivf": snap(S.ivf_ann_topk(emb, queries, k=5)),
                 "pq": snap(S.pq_adc_topk(emb, queries, k=5)),
+                "pq_float_words": snap(
+                    S.pq_adc_topk(wide, wide, k=2, m=2, codebooks=float_books)
+                ),
                 "ivfpq": snap(S.ivfpq_adc_topk(emb, queries, k=5)),
                 # threshold −1 keeps every bucket-collision pair: the point
                 # is bit-equality of the cosines, not the pair-set size

@@ -595,7 +595,7 @@ def test_redelivered_chunk_is_dropped(spark, tmp_path):
         P.backfill(spark, lake, provider, (FX.WATCH_CONTRACT,), chunk_size=15)
     # full-chunk, partial-bucket, and tip redeliveries
     for lo, hi in ((0, 14), (7, 22), (15, 29)):
-        raw = provider.fetch_blocks(spark, lo, hi)
+        raw = provider.fetch_blocks(spark, lo, hi).localCheckpoint(eager=True)
         P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for)
     assert _warehouse_rows(victim) == _warehouse_rows(control)
 
@@ -618,12 +618,10 @@ def test_crash_mid_write_all_then_retry(spark, tmp_path):
 
     victim.write_all(normalize_blocks(raw), normalize_transactions(raw))
     # retried delivery of the same chunk, now with all sinks
-    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for,
-                 pre_materialized=True)
+    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for)
     assert _warehouse_rows(victim) == _warehouse_rows(control)
     # and the retry itself is idempotent under a second retry
-    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for,
-                 pre_materialized=True)
+    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for)
     assert _warehouse_rows(victim) == _warehouse_rows(control)
 
 
@@ -676,10 +674,9 @@ def test_torn_write_all_healed_by_tail(spark, tmp_path):
     assert victim.resume_point() == 19
 
     # crash after the writes of 20..29: every sink committed (ingest_raw
-    # without a height range advances no marker), then the replay
+    # without a verified_hi advances no marker), then the replay
     raw = provider.fetch_blocks(spark, 20, 29).localCheckpoint(eager=True)
-    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for,
-                 pre_materialized=True)
+    P.ingest_raw(victim, raw, (FX.WATCH_CONTRACT,), provider.receipts_for)
     assert victim.latest_block_number() == 29
     assert victim.resume_point() == 19
     tail(raw, 1)
@@ -690,19 +687,24 @@ def test_torn_write_all_healed_by_tail(spark, tmp_path):
 def test_write_all_rejects_verified_hi_outside_range(spark, tmp_path):
     """``verified_hi`` is a verified prefix of ``height_range``: anything
     outside ``[lo - 1, hi]`` (or with no range at all) is a caller bug and
-    fails before a row is written or the marker moves."""
+    fails before a row is written or the marker moves. A ``height_range``
+    without ``verified_hi`` writes the rows but leaves the marker where it
+    was — the safe under-advance (resume re-delivers the range)."""
     from core_etl_spark.operators.transforms import normalize_blocks
 
     lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
-    blocks = normalize_blocks(
-        FixtureBlockProvider(n_blocks=10, txs_per_block=1).fetch_blocks(spark, 0, 9)
-    )
+    provider = FixtureBlockProvider(n_blocks=20, txs_per_block=1)
+    blocks = normalize_blocks(provider.fetch_blocks(spark, 0, 9))
     for bad, rng in ((10, (0, 9)), (-2, (0, 9)), (5, None)):
         with pytest.raises(ValueError, match="verified_hi"):
             lake.write_all(blocks, height_range=rng, verified_hi=bad)
     assert not lake.exists("blocks")
     assert lake.resume_point() == -1
     lake.write_all(blocks, height_range=(0, 9), verified_hi=9)
+    assert lake.resume_point() == 9
+    lake.write_all(normalize_blocks(provider.fetch_blocks(spark, 10, 19)),
+                   height_range=(10, 19))
+    assert lake.latest_block_number() == 19
     assert lake.resume_point() == 9
 
 
@@ -806,26 +808,30 @@ class _NullHashProvider(FixtureBlockProvider):
         )
 
 
-def test_integrity_sweep_repairs_null_hash_blocks(spark, tmp_path):
+@pytest.mark.parametrize("flagged", [{7, 8, 23}, {29}], ids=["mid_chain", "tip"])
+def test_integrity_sweep_repairs_null_hash_blocks(spark, tmp_path, flagged):
     """ADVICE r15: a NULL-hash block below the resume point has no
     automatic re-delivery trigger — the sweep must flag it, clean it, and
-    re-fetch it, ending row-identical to a never-dirty warehouse."""
+    re-fetch it, ending row-identical to a never-dirty warehouse.
+
+    ``{29}`` flags the tip: ``clean_blocks`` clamps the marker to 28, and
+    only the repair's own ``verified_hi`` takes it back to 29."""
     lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
-    dirty = _NullHashProvider({7, 8, 23}, n_blocks=30, txs_per_block=2)
+    dirty = _NullHashProvider(flagged, n_blocks=30, txs_per_block=2)
     P.backfill(spark, lake, dirty, (FX.WATCH_CONTRACT,), chunk_size=10)
     assert lake.resume_point() == 29  # NULL hash ≠ missing height
     from core_etl_spark.operators.verify import unverifiable_blocks
     assert sorted(r["number"] for r in
-                  unverifiable_blocks(lake.blocks()).collect()) == [7, 8, 23]
+                  unverifiable_blocks(lake.blocks()).collect()) == sorted(flagged)
     assert cli.main(["--warehouse", str(tmp_path / "wh"),
                      "verify", "blocks"]) == 1  # surfaced by V2 extension
 
     healed = FixtureBlockProvider(n_blocks=30, txs_per_block=2)
     n = P.repair_unverifiable_blocks(spark, lake, healed,
                                      (FX.WATCH_CONTRACT,))
-    assert n == 3
+    assert n == len(flagged)
     assert unverifiable_blocks(lake.blocks()).count() == 0
-    assert lake.resume_point() == 29  # marker survived the mid-chain clean
+    assert lake.resume_point() == 29  # the repair's verified_hi holds it
 
     control = Lake(spark, str(tmp_path / "control"), bucket_size=10)
     P.backfill(spark, control, healed, (FX.WATCH_CONTRACT,), chunk_size=10)
@@ -864,7 +870,7 @@ def test_receipts_hint_detected_by_signature_not_typeerror(spark, tmp_path):
         return provider.receipts_for(raw_df)
 
     lake2 = Lake(spark, str(tmp_path / "wh2"), bucket_size=10)
-    P.ingest_raw(lake2, provider.fetch_blocks(spark, 0, 4),
+    P.ingest_raw(lake2, provider.fetch_blocks(spark, 0, 4).localCheckpoint(eager=True),
                  (FX.WATCH_CONTRACT,), legacy)
     assert calls["legacy"] == 1
 
