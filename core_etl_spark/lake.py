@@ -13,6 +13,11 @@ This is the Spark-first replacement for the reference's storage backends
 - **Writes** (K4/K5): micro-batch appends; Spark owns buffering, so the
   reference's 750/500-row thresholds (sqlite3.rs:401, postgres.rs:394)
   disappear. Module gating (sqlite3.rs:422,443,453) is the ``modules`` set.
+- **Reads**: every scan (``Lake._scan``) carries the table's stored
+  schema — the declared row schema with the partition columns last — so
+  Spark runs no schema-inference job before the query's own, and a point
+  lookup is one job. A table with no rows yet reads as an empty frame with
+  that same schema, so every lookup on a day-zero lake returns 0 rows.
 - **Mutations** (K6-K9): Parquet files are immutable, so every mutation is a
   *partition-scoped* delete-and-rewrite — read ONLY the affected buckets
   (partition-pruned scan), filter, dynamically overwrite those buckets.
@@ -37,7 +42,7 @@ import shutil
 import threading
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .schemas import BLOCK_SCHEMA, TOKEN_TRANSFER_SCHEMA, TRANSACTION_SCHEMA
 
@@ -69,6 +74,26 @@ _NATURAL_KEY = {
     BLOCKS: ("number",),
     TRANSACTIONS: ("hash",),
     TOKEN_TRANSFERS: ("tx_hash", "address", "transfer_index"),
+}
+#: The schema every read of a table returns (``Lake._scan``): the declared
+#: row schema with the partition columns moved to the end in layout order,
+#: every field nullable — exactly what parquet schema inference derives
+#: from the files and the directory names, declared so no inference job
+#: runs. ``block_bucket`` reads back as int, which is what partition
+#: discovery infers from a directory value below 2^31; a bucket index at
+#: or above it (height 2.1e14 at the default bucket size) fails the read
+#: with INVALID_PARTITION_VALUE.
+_PARTITION_TYPES = {"address": T.StringType(), "block_bucket": T.IntegerType()}
+_STORED_SCHEMAS = {
+    name: T.StructType(
+        [
+            T.StructField(f.name, f.dataType, True)
+            for f in schema
+            if f.name not in _PARTITION_COLS[name]
+        ]
+        + [T.StructField(c, _PARTITION_TYPES[c], True) for c in _PARTITION_COLS[name]]
+    )
+    for name, schema in _SCHEMAS.items()
 }
 
 
@@ -302,11 +327,9 @@ class Lake:
             if all(m is not None and m < height_range[0] for m in maxes):
                 return out
         keys = list(_NATURAL_KEY[name])
-        existing = (
-            self.spark.read.parquet(self.path(name))
-            .filter(F.col("block_bucket").isin(overlap))
-            .select(*keys)
-        )
+        existing = self._scan(
+            name, [d for b in overlap for d in committed[b]]
+        ).select(*keys)
         # Re-select the incoming column order: a list-form equi-join moves
         # the key columns to the FRONT, so a deduped append would write
         # parquet files whose column order differs from fresh appends —
@@ -469,10 +492,24 @@ class Lake:
 
     # --- reads -----------------------------------------------------------------
 
+    def _scan(self, name: str, dirs: list[str] | None = None) -> DataFrame:
+        """Every read of a lake table goes through here. The scan carries
+        the table's stored schema (``_STORED_SCHEMAS``), so Spark runs no
+        schema-inference job before the query's own. ``dirs`` narrows the
+        scan to those leaf partition dirs, with ``basePath`` set so the
+        partition columns survive; the file listing then touches only
+        those buckets. A table with no rows yet, or an empty ``dirs``,
+        reads as an empty frame with the same schema."""
+        schema = _STORED_SCHEMAS[name]
+        reader = self.spark.read.schema(schema)
+        if dirs is None and self.exists(name):
+            return reader.parquet(self.path(name))
+        if dirs:
+            return reader.option("basePath", self.path(name)).parquet(*dirs)
+        return self.spark.createDataFrame([], schema)
+
     def read(self, name: str) -> DataFrame:
-        if not self.exists(name):
-            return self.spark.createDataFrame([], _SCHEMAS[name])
-        return self.spark.read.parquet(self.path(name))
+        return self._scan(name)
 
     def blocks(self) -> DataFrame:
         return self.read(BLOCKS)
@@ -624,13 +661,10 @@ class Lake:
                     m = self._footer_max(name, leaves[top])
                     if m is not None:
                         return m
-                if top is None:
-                    df = self.read(name)
-                else:
-                    # read ONLY the top bucket's leaf dirs — skips the
-                    # full-table file listing, not just the file scan
-                    # (block_bucket is the leaf level in every layout)
-                    df = self.spark.read.parquet(*leaves[top])
+                # read ONLY the top bucket's leaf dirs — skips the
+                # full-table file listing, not just the file scan
+                # (block_bucket is the leaf level in every layout)
+                df = self._scan(name, leaves[top] if leaves else None)
                 row = df.agg(F.max(_NUMBER_COL[name]).alias("m")).first()
                 if row and row.m is not None:
                     return int(row.m)
@@ -662,7 +696,7 @@ class Lake:
 
     def _delete_where_locked(self, name: str, heights_pred) -> None:
         num = F.col(_NUMBER_COL[name])
-        df = self.spark.read.parquet(self.path(name))
+        df = self._scan(name)
         buckets = [
             r.block_bucket
             for r in df.filter(heights_pred(num)).select("block_bucket").distinct().collect()
@@ -807,7 +841,7 @@ class Lake:
         # _delete_where and retention_cleanup).
         self._ensure_writer_lock()
         with self.mutex:
-            df = self.spark.read.parquet(self.path(name))
+            df = self._scan(name)
             per_bucket = (
                 df.withColumn("_file", F.input_file_name())
                 .groupBy("block_bucket")
@@ -871,13 +905,11 @@ class Lake:
     def block_hashes_at(self, heights: Iterable[int]) -> list[tuple[int, str | None]]:
         """Stored ``(number, hash)`` pairs at ``heights``: the input of the
         driver-side fork check (``maintenance.forked_heights``). Reads only
-        the leaf dirs of the buckets that can hold those heights, with an
-        explicit two-column schema (no schema-inference job) and a
-        ``number IN (...)`` filter pushed to the parquet row groups — one
-        small job, never a table scan."""
+        the ``number`` and ``hash`` columns of the leaf dirs of the buckets
+        that can hold those heights, with a ``number IN (...)`` filter
+        pushed to the parquet row groups — one small job, never a table
+        scan."""
         heights = sorted({int(h) for h in heights})
-        if not heights or not self.exists(BLOCKS):
-            return []
         leaves = self._bucket_leaf_dirs(BLOCKS)
         dirs = [
             d
@@ -887,9 +919,9 @@ class Lake:
         if not dirs:
             return []
         rows = (
-            self.spark.read.schema("number long, hash string")
-            .parquet(*dirs)
+            self._scan(BLOCKS, dirs)
             .filter(F.col("number").isin(heights))
+            .select("number", "hash")
             .collect()
         )
         return [(r.number, r.hash) for r in rows]

@@ -33,14 +33,6 @@ ALL_SELECTORS = (SELECTOR_TRANSFER, SELECTOR_BATCH_TRANSFER, SELECTOR_TRANSFER_F
 #: 1-based SQL ``substring``. Word = 64 chars, address = trailing 44.
 _ADDR_IN_WORD = 20  # chars of zero padding before the 44-char address
 
-#: Receipts-join strategy knob for the A/B harness
-#: (scripts/o1_receipts_ab.py) — ``None`` (production: stats + AQE decide)
-#: or ``"broadcast"`` (force-broadcast the receipts side; the pre-r09
-#: behavior that is a guaranteed OOM when receipts scale with the chunk).
-#: Module-global so the experiment can flip strategies without code edits;
-#: never set by library code.
-RECEIPTS_JOIN_HINT: str | None = None
-
 
 def _slice(col: Column, start0: int, length: int) -> Column:
     """substring with the reference's 0-based offsets (cbc20.rs slices)."""
@@ -215,15 +207,13 @@ def extract_token_transfers(
         # txs/block — a 1M-block chunk of a busy chain is 10⁸+ receipts),
         # so the join strategy is left to stats + AQE, same rule as g03's
         # scaling dims; at true scale the fallback is a shuffle join on
-        # tx_hash. Measured local cost of that rule (scripts/
-        # o1_receipts_ab.py, min-of-5 isolated o1 at sf0.1, driver host):
-        # AQE 2.00 s vs forced broadcast 1.72 s — the ~0.28 s is AQE
-        # materializing the shuffle before it can see the receipts are
-        # small and convert SMJ→BHJ (the mapInPandas fetch has no stats,
-        # so the static planner can't pick the broadcast). Accepted: the
-        # r08 "identical wall" claim was wrong, the OOM-safety rule is not.
-        if RECEIPTS_JOIN_HINT == "broadcast":
-            rc = F.broadcast(rc)
+        # tx_hash. Measured local cost of that rule (r10, min-of-5
+        # isolated o1 at sf0.1; PROGRESS.md r10.2): AQE 2.00 s vs forced
+        # broadcast 1.72 s — the ~0.28 s is AQE materializing the shuffle
+        # before it can see the receipts are small and convert SMJ→BHJ
+        # (the mapInPandas fetch has no stats, so the static planner
+        # can't pick the broadcast). Accepted: the r08 "identical wall"
+        # claim was wrong, the OOM-safety rule is not.
         transfers = (
             transfers.join(rc, transfers["tx_hash"] == rc["_r_tx"], "left")
             .drop("_r_tx")

@@ -8,26 +8,31 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
-from core_etl_spark.lake import Lake
+from core_etl_spark.lake import ALL_MODULES, TOKEN_TRANSFERS, Lake
 from core_etl_spark.operators import decode as D
 from core_etl_spark.operators import transforms as T
+from core_etl_spark.operators import views
 from core_etl_spark.sources import fixtures as FX
 
 N_BLOCKS = 40
 BUCKET = 10
 
 
-@pytest.fixture()
-def lake(spark, tmp_path):
-    raw = FX.raw_blocks(spark, n_blocks=N_BLOCKS, txs_per_block=4)
+def _fill(spark, lk: Lake, n_blocks: int) -> Lake:
+    raw = FX.raw_blocks(spark, n_blocks=n_blocks, txs_per_block=4)
     blocks = T.normalize_blocks(raw)
     txs = T.normalize_transactions(raw)
     transfers = D.extract_token_transfers(txs, FX.WATCH_CONTRACT, FX.receipts(raw))
     transfers = T.propagate_created_at(transfers, txs, blocks)
-    lk = Lake(spark, str(tmp_path / "wh"), bucket_size=BUCKET)
     lk.write_all(blocks, txs, transfers)
     return lk
+
+
+@pytest.fixture()
+def lake(spark, tmp_path):
+    return _fill(spark, Lake(spark, str(tmp_path / "wh"), bucket_size=BUCKET), N_BLOCKS)
 
 
 def test_layout_and_roundtrip(lake):
@@ -55,6 +60,95 @@ def test_pruned_range_scan(lake):
     assert lake.blocks_in_range(15, 24).count() == 10
     assert lake.blocks_in_range(35).count() == 5  # open-ended
     assert lake.block_transactions(17).count() == 4
+
+
+def test_read_schema_is_the_inferred_schema(lake, spark):
+    """Reads declare the stored schema instead of inferring it; the
+    declared one must be exactly what inference would give: the same
+    names in the same order (partition columns last, in layout order),
+    the same types (``block_bucket`` int) and every field nullable."""
+    for name in ALL_MODULES:
+        declared = lake.read(name).schema
+        assert declared == spark.read.parquet(lake.path(name)).schema, name
+        assert declared["block_bucket"].dataType == IntegerType()
+        assert all(f.nullable for f in declared.fields)
+    assert lake.token_transfers().columns[-2:] == ["address", "block_bucket"]
+
+
+def test_fresh_lake_lookups_return_no_rows(spark, tmp_path):
+    """Day zero: every lookup on a lake with no rows yet returns 0 rows
+    (empty in, empty out), and a table reads with the same schema before
+    and after its first write."""
+    lk = Lake(spark, str(tmp_path / "fresh"), bucket_size=BUCKET)
+    before = {name: lk.read(name).schema for name in ALL_MODULES}
+    assert lk.block_by_number(3).count() == 0
+    assert lk.blocks_in_range(0, 5).count() == 0
+    assert lk.blocks_in_range(5).count() == 0
+    assert lk.block_transactions(3).count() == 0
+    assert lk.height_pruned(TOKEN_TRANSFERS, 0, 5).count() == 0
+    assert views.transfers_by_tx(lk.token_transfers(), "00" * 32).count() == 0
+    assert views.list_transfer_tokens(lk.token_transfers()).count() == 0
+    assert lk.block_hashes_at([3, 4]) == []
+    assert lk.latest_block_number() == -1
+
+    _fill(spark, lk, 12)
+    for name in ALL_MODULES:
+        assert lk.read(name).schema == before[name], name
+    assert lk.block_by_number(3).count() == 1
+
+
+def test_point_lookup_runs_one_job(lake, spark):
+    """A point lookup on a settled lake is the query's own job and nothing
+    else: the scan declares its schema, so no schema-inference job runs
+    first (2 jobs when every read inferred it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("lake-point-lookup-budget", "one point lookup")
+    try:
+        rows = lake.block_by_number(17).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r.number for r in rows] == [17]
+    jobs = sc.statusTracker().getJobIdsForGroup("lake-point-lookup-budget")
+    assert len(jobs) == 1, sorted(jobs)
+
+
+@pytest.fixture()
+def backfilled(spark, tmp_path):
+    from core_etl_spark.pipeline import backfill
+    from core_etl_spark.sources.provider import FixtureBlockProvider
+
+    lk = Lake(spark, str(tmp_path / "bf"), bucket_size=BUCKET)
+    backfill(spark, lk, FixtureBlockProvider(n_blocks=30, txs_per_block=4),
+             (FX.WATCH_CONTRACT,), end=29, chunk_size=BUCKET)
+    return lk
+
+
+def test_transfers_by_tx_matches_python_filter(backfilled):
+    every = backfilled.token_transfers().collect()
+    by_tx: dict[str, list] = {}
+    for r in every:
+        by_tx.setdefault(r.tx_hash, []).append(
+            (r.from_addr, r.to_addr, r.value, r.transfer_index, r.status)
+        )
+    # a batchTransfer fans one tx into several rows; take the widest tx
+    # and a single-row one, plus a hash that has no transfers
+    widest = max(by_tx, key=lambda h: len(by_tx[h]))
+    single = next(h for h, rows in by_tx.items() if len(rows) == 1)
+    assert len(by_tx[widest]) > 1
+    for tx in (widest, single, "00" * 32):
+        got = views.transfers_by_tx(backfilled.token_transfers(), tx)
+        assert got.columns == [
+            "from_addr", "to_addr", "value", "transfer_index", "status"
+        ]
+        assert sorted(tuple(r) for r in got.collect()) == sorted(by_tx.get(tx, []))
+
+
+def test_list_transfer_tokens_matches_python_filter(backfilled):
+    every = backfilled.token_transfers().collect()
+    got = views.list_transfer_tokens(backfilled.token_transfers()).collect()
+    expected = sorted({r.address for r in every})
+    assert sorted(r.address for r in got) == expected == [FX.WATCH_CONTRACT]
 
 
 def test_latest_and_fallback(lake, spark, tmp_path):
