@@ -20,7 +20,7 @@ This is the Spark-first replacement for the reference's storage backends
   that same schema, so every lookup on a day-zero lake returns 0 rows.
 - **Mutations** (K6-K9): Parquet files are immutable, so every mutation is a
   *partition-scoped* delete-and-rewrite — read ONLY the affected buckets
-  (partition-pruned scan), filter, dynamically overwrite those buckets.
+  (partition-pruned scan), filter, stage the survivors and swap them in.
   Nothing outside the touched partitions is ever rewritten; a reorg at the
   tip costs one bucket regardless of table size. Fully-emptied buckets are
   dropped at the directory level (the local-FS stand-in for a metastore
@@ -81,8 +81,8 @@ _NATURAL_KEY = {
 #: from the files and the directory names, declared so no inference job
 #: runs. ``block_bucket`` reads back as int, which is what partition
 #: discovery infers from a directory value below 2^31; a bucket index at
-#: or above it (height 2.1e14 at the default bucket size) fails the read
-#: with INVALID_PARTITION_VALUE.
+#: or above it (height 2.1e14 at the default bucket size) would fail the
+#: read with INVALID_PARTITION_VALUE, so ``Lake._bucket`` refuses it.
 _PARTITION_TYPES = {"address": T.StringType(), "block_bucket": T.IntegerType()}
 _STORED_SCHEMAS = {
     name: T.StructType(
@@ -199,24 +199,25 @@ class Lake:
         )
 
     def _bucket(self, number_col: str) -> F.Column:
-        return (F.col(number_col) / F.lit(self.bucket_size)).cast("long").alias(
-            "block_bucket"
-        )
+        # Reads declare block_bucket int (_STORED_SCHEMAS), so a bucket
+        # index at or above 2^31 fails the write job itself: nothing of it
+        # is committed, and no extra job runs.
+        b = (F.col(number_col) / F.lit(self.bucket_size)).cast("long")
+        too_big = F.raise_error(F.lit(
+            f"{number_col} // bucket_size {self.bucket_size} >= 2^31: "
+            "block_bucket would not fit the int that lake reads declare"
+        ))
+        return F.when(b >= 2**31, too_big).otherwise(b).alias("block_bucket")
 
     # --- writes (K4/K5) --------------------------------------------------------
 
-    def write(
-        self,
-        name: str,
-        df: DataFrame,
-        mode: str = "append",
-        height_range: tuple[int, int] | None = None,
-    ) -> None:
+    def write(self, name: str, df: DataFrame) -> None:
         """Append a micro-batch. Adds the bucket column, sorts within
         partitions by height (clustering for min/max skipping — the index
-        replacement), and writes through the partition layout. ``mode`` may
-        be ``overwrite`` with dynamic partition overwrite for idempotent
-        re-ingest of a bucket (the exactly-once story, SURVEY §7).
+        replacement), and appends through the partition layout. The append
+        is idempotent: rows whose natural key the lake already holds are
+        dropped first (``_drop_redelivered``), so re-delivering a bucket
+        leaves it unchanged (the exactly-once story, SURVEY §7).
 
         Holds the lake mutex: ``compact``'s scan→stage→swap is only safe if
         every writer serializes against it — a write landing between
@@ -225,13 +226,12 @@ class Lake:
         hold."""
         self._ensure_writer_lock()
         with self.mutex:
-            self._write_unlocked(name, df, mode, height_range)
+            self._write_unlocked(name, df)
 
     def _write_unlocked(
         self,
         name: str,
         df: DataFrame,
-        mode: str,
         height_range: tuple[int, int] | None = None,
     ) -> None:
         # Lock-free body so write_all's pool workers (different threads — an
@@ -241,14 +241,12 @@ class Lake:
             return
         num = _NUMBER_COL[name]
         out = df.withColumn("block_bucket", self._bucket(num))
-        if mode == "append":
-            out = self._drop_redelivered(name, out, height_range)
+        out = self._drop_redelivered(name, out, height_range)
         parts = _PARTITION_COLS[name]
         (
             out.repartition(*[F.col(c) for c in parts])
             .sortWithinPartitions(num)
-            .write.mode(mode)
-            .option("partitionOverwriteMode", "dynamic")
+            .write.mode("append")
             .partitionBy(*parts)
             .parquet(self.path(name))
         )
@@ -405,7 +403,7 @@ class Lake:
                 futures = [
                     pool.submit(
                         inheritable_thread_target(self.spark)(self._write_unlocked),
-                        name, df, "append", height_range,
+                        name, df, height_range,
                     )
                     for name, df in todo
                 ]
@@ -796,32 +794,6 @@ class Lake:
                 return
             for name in self.modules:
                 self._delete_where(name, lambda c: c <= F.lit(boundary))
-
-    # --- bucketed mirrors (co-located joins) ---------------------------------------
-
-    def write_bucketed(self, name: str, df: DataFrame, n_buckets: int = 16) -> str:
-        """Write a hash-bucketed mirror of a table for *shuffle-free* equi-
-        joins on the height key: two tables bucketed the same way co-locate
-        matching keys, so ``blocks ⋈ transactions`` needs no Exchange on
-        either side — the 100 TB answer when both join sides are too big to
-        broadcast and the join recurs (SURVEY §4's bucketing row).
-
-        Bucketing metadata only exists in the session catalog
-        (``saveAsTable``), so mirrors are managed tables named
-        ``<name>_bucketed``; call once per ingest epoch, not per query."""
-        self._ensure_writer_lock()
-        num = _NUMBER_COL[name]
-        table = f"{name}_bucketed"
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, num)
-            .sortBy(num)
-            .format("parquet")
-            .option("path", os.path.join(self.root, "_bucketed", table))
-            .saveAsTable(table)
-        )
-        return table
 
     # --- compaction ---------------------------------------------------------------
 

@@ -26,55 +26,35 @@ from pyspark.sql.functions import pandas_udf
 
 from .text import tokens
 
-#: Materialization strategy for multi-branch intermediates (the shingle
-#: index that feeds both self-join sides plus the size agg, LSH band
-#: tables, CC frontiers). One of:
-#:
-#: - ``"eager"`` — ``localCheckpoint(eager=True)``: one dedicated driver job
-#:   materializes the intermediate before any consumer plan is built, so the
-#:   upstream pipeline provably runs exactly once.
-#: - ``"lazy"``  — ``localCheckpoint(eager=False)``: the caller's terminal
-#:   action materializes it as a side effect; saves the dedicated job but
-#:   under AQE two *concurrently launched* consumer stages can race and each
-#:   recompute the upstream pipeline before the persisted blocks land
-#:   (duplicated computation, never a wrong answer).
-#: - ``"none"``  — no materialization; every consumer branch recomputes.
-#: - ``"persist2"`` — ``persist(MEMORY_AND_DISK_2)``: 2×-replicated blocks
-#:   that SURVIVE one executor loss where localCheckpoint's unreplicated
-#:   blocks fail the job (measured, scripts/chaos_soak.py ckpt leg) — the
-#:   mode for preemptible/spot fleets. Trades: doubled storage + a
-#:   replication write, and the plan stays in the CacheManager until the
-#:   DataFrame is garbage-collected (localCheckpoint's blocks are
-#:   reclaimed more promptly by the ContextCleaner).
-#:
-#: Module-global rather than per-call so the bench A/B harness
-#: (scripts/l06_checkpoint_ab.py) can flip strategies without code edits.
-#: Default picked by measurement on the driver-bench host — see the r09
-#: experiment table in PROGRESS.md.
-CHECKPOINT_MODE = "eager"
 
+def _materialize(df: DataFrame, mode: str = "eager") -> DataFrame:
+    """Cut lineage + share one computation across plan branches of a
+    multi-branch intermediate (the shingle index that feeds both self-join
+    sides plus the size agg, LSH band tables, CC frontiers). ``mode``:
 
-def _materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
-    """Cut lineage + share one computation across plan branches, per
-    :data:`CHECKPOINT_MODE` (or the per-call ``mode`` override — callers
-    whose input is provably cheap pass ``"none"`` to skip the dedicated
-    materialization job; see ``neardup_components_star``).
-    ``localCheckpoint`` rather than ``.cache()``:
-    cached plans live in the CacheManager until an explicit unpersist
-    (impossible for a lazily returned result), while checkpointed RDDs are
-    reclaimed by the ContextCleaner as soon as the result DataFrame drops.
-    (Cluster note: localCheckpoint trades lineage for speed — an executor
-    loss fails the job instead of recomputing [measured:
-    scripts/chaos_soak.py ckpt leg]; acceptable for bounded dedup jobs.
-    On preemptible nodes pass ``mode="persist2"`` — replicated blocks
-    survive one loss at the cost of doubled storage and CacheManager
-    retention.)"""
-    mode = CHECKPOINT_MODE if mode is None else mode
-    if mode not in ("eager", "lazy", "none", "persist2", "disk"):
-        # a typo'd mode would silently run as "lazy" otherwise
+    - ``"eager"`` (the default) — ``localCheckpoint(eager=True)``:
+      one dedicated driver job materializes the intermediate before any
+      consumer plan is built, so the upstream pipeline provably runs
+      exactly once. A lazy checkpoint saves that job, but under AQE two
+      concurrently launched consumer stages can each recompute the
+      upstream; eager is the race-free form (A/B tables in PROGRESS.md
+      r09.1 for l06 and r10.1 for l18b, where eager wins in a session
+      that has run the other dedup pipelines).
+    - ``"disk"`` — ``persist(DISK_ONLY)``, for ``jaccard_pairs``' large
+      shingle index (see ``DISK_STAGE_SOURCE_BYTES``).
+    - ``"persist2"`` — ``persist(MEMORY_AND_DISK_2)``: 2×-replicated blocks
+      that SURVIVE one executor loss where localCheckpoint's unreplicated
+      blocks fail the job (measured, scripts/chaos_soak.py ckpt leg) — the
+      mode for preemptible/spot fleets. Trades: doubled storage + a
+      replication write, and the plan stays in the CacheManager until the
+      DataFrame is garbage-collected.
+
+    ``localCheckpoint`` rather than ``.cache()``: cached plans live in the
+    CacheManager until an explicit unpersist (impossible for a lazily
+    returned result), while checkpointed RDDs are reclaimed by the
+    ContextCleaner as soon as the result DataFrame drops."""
+    if mode not in ("eager", "persist2", "disk"):
         raise ValueError(f"unknown materialization mode {mode!r}")
-    if mode == "none":
-        return df
     if mode == "persist2":
         from pyspark import StorageLevel
 
@@ -83,7 +63,7 @@ def _materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
         from pyspark import StorageLevel
 
         return df.persist(StorageLevel.DISK_ONLY)
-    return df.localCheckpoint(eager=(mode == "eager"))
+    return df.localCheckpoint(eager=True)
 
 
 #: Source-size threshold above which `jaccard_pairs` stages its shingle
@@ -267,12 +247,11 @@ def jaccard_pairs(
     # Materialize: the shingle index feeds 3+ plan branches (both join sides
     # and the size agg); without materialization each branch re-runs the
     # tokenize→shingle→explode pipeline (measured 4× slower at sf0.1).
-    # Strategy via _materialize/CHECKPOINT_MODE: r07 switched to lazy on a
+    # An eager checkpoint (_materialize): r07 switched to lazy on a
     # builder-host −16%, but the driver bench then regressed +33-44% two
     # rounds running — the concurrent-AQE-stage duplicated-computation race
-    # in the lazy mode's worst case. The r09 A/B on this host
-    # (scripts/l06_checkpoint_ab.py, table in PROGRESS.md) settled the
-    # default; see CHECKPOINT_MODE.
+    # in the lazy mode's worst case. The r09 A/B (table in PROGRESS.md
+    # r09.1) settled on eager.
     sh = shingle_table(df, text_col, id_col, n, max_tokens=max_tokens)
     if shingle_key == "xxhash64":
         sh = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
@@ -311,11 +290,9 @@ def jaccard_pairs(
         )
     # Large-corpus staging (VERDICT r15 directive 2): past the source-size
     # threshold the index goes to DISK_ONLY — see DISK_STAGE_SOURCE_BYTES.
-    # Only the module default is overridden; an explicit CHECKPOINT_MODE
-    # experiment (the bench A/B harness) still wins.
     src_bytes = _plan_size_bytes(df)
     staged = None
-    if CHECKPOINT_MODE == "eager" and src_bytes >= DISK_STAGE_SOURCE_BYTES:
+    if src_bytes >= DISK_STAGE_SOURCE_BYTES:
         sh = staged = _materialize(sh, "disk")
         sh.count()  # populate the disk blocks NOW — one dedicated job, the
         # same provably-runs-once guarantee eager localCheckpoint gives
@@ -613,8 +590,8 @@ def minhash_dedup_pairs(
     of scope, so long multi-spec sessions don't accumulate pinned
     storage."""
     # Materialization strategy (hybrid — measured r09): only the EXPENSIVE
-    # shared upstream (the shingle UDF) goes through _materialize (eager by
-    # default); the derivations past it — explode, band hashing, the
+    # shared upstream (the shingle UDF) goes through _materialize (eager);
+    # the derivations past it — explode, band hashing, the
     # candidate distinct — checkpoint LAZILY. A concurrent-stage race on a
     # lazy checkpoint here re-derives from the doc_sh cache, never re-runs
     # the tokenize→shingle pipeline, so the worst case is bounded cheap;
@@ -810,9 +787,7 @@ def neardup_components(pairs: DataFrame, max_iter: int = 32) -> DataFrame:
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component"))
 
 
-def neardup_components_star(
-    pairs: DataFrame, max_iter: int = 50, input_mode: str | None = None
-) -> DataFrame:
+def neardup_components_star(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Connected components via large-star/small-star alternation — the
     extreme-scale swap documented in :func:`neardup_components`. Converges
     in O(log n) rounds regardless of component diameter (Kiveris et al.,
@@ -889,16 +864,12 @@ def neardup_components_star(
     # One materialization of the INPUT pairs, not one per derivation: nodes
     # and edges both read the cached pair set, so an expensive upstream (the
     # Jaccard/LSH pipeline in l17/l18 use) is computed once, not twice.
-    # ``input_mode`` overrides the module default per call. Measured
-    # guidance (r10, sf0.1 chain set): in a FRESH session skipping the
-    # checkpoint wins (none 2.67 < lazy 2.79 < eager 2.85 — the dedicated
-    # materialization job is fixed overhead on a cheap input), but in a
-    # session that has already run the dedup pipelines the ranking FLIPS
-    # (eager 2.88 < lazy 2.99 < none 3.42), so the spec layer leaves this
-    # at the module default; the override exists for callers that know
-    # their input and session shape (scripts/l18b_*_ab.py are the A/B
-    # harnesses).
-    pairs_m = _materialize(pairs, mode=input_mode)
+    # Eager, measured (PROGRESS.md r10.1, sf0.1 chain set): in a FRESH
+    # session skipping the checkpoint wins (none 2.67 < lazy 2.79 < eager
+    # 2.85 — the dedicated materialization job is fixed overhead on a cheap
+    # input), but in a session that has already run the dedup pipelines
+    # the ranking FLIPS (eager 2.88 < lazy 2.99 < none 3.42).
+    pairs_m = _materialize(pairs)
     nodes = (
         pairs_m.select(F.col("id_a").alias("id"))
         .union(pairs_m.select(F.col("id_b").alias("id")))

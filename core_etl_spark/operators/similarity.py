@@ -41,10 +41,9 @@ _ACC = "decimal(28,6)"
 #: error, never a silent wrong answer: safe while max|coord| ≤
 #: √(2⁶³/(dim·10⁶)) ≈ 3.8e5 at dim 64 (≈1.1e5 at dim 768) — far above
 #: any real embedding's coordinate range; keep "decimal" for corpora
-#: with unbounded magnitudes. Module-global like dedup.CHECKPOINT_MODE
-#: so the A/B harnesses and production profiles flip it without code
-#: edits, env-settable (``SPARK_GRAFT_VEC_ARITH=int64``) so a production
-#: profile can flip it the same way it flips the parquet codec.
+#: with unbounded magnitudes. Env-settable (``SPARK_GRAFT_VEC_ARITH=int64``)
+#: so a production profile can flip it without code edits, the same way
+#: it flips the parquet codec.
 import os as _os
 
 VEC_ARITH = _os.environ.get("SPARK_GRAFT_VEC_ARITH", "decimal")

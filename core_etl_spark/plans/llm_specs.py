@@ -1119,10 +1119,9 @@ def l18b(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     candidate generation, so this row tracks the iterative
     large-star/small-star convergence loop itself — pair generation is
     already benched by l06/l07. Chain edges force multi-round
-    convergence (diameter 16 → ≤ ~5 rounds). Input materialization stays
-    on the module default (eager): the r10 A/B pair
-    (scripts/l18b_ckpt_ab.py fresh-session, scripts/l18b_insession_ab.py
-    bench-session) found the modes FLIP with session state — fresh: none
+    convergence (diameter 16 → ≤ ~5 rounds). Input materialization is
+    eager: the r10 fresh-session and bench-session A/B pair (PROGRESS.md
+    r10.1) found the modes FLIP with session state — fresh: none
     2.67 < lazy 2.79 < eager 2.85; after the l06-l12 pipelines have run
     (the driver-bench condition): eager 2.88 < lazy 2.99 < none 3.42 —
     so the r09 +29% driver regression was session noise plus host

@@ -147,91 +147,3 @@ def dedup_within_watermark(
     return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
         list(keys)
     )
-
-
-def running_totals_tws(
-    stream: DataFrame,
-    key_col: str = "source",
-    amount_col: str = "amount",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Per-key lifetime row count + amount sum via ``transformWithState``
-    (Spark 4's arbitrary-stateful API) — the modern counterpart to
-    :func:`running_counts`: typed state handles instead of a single
-    state tuple, and **native per-state TTL** (``ttl_ms``) instead of
-    hand-rolled timeout plumbing, so idle keys expire without any timer
-    code. The shape is the reference's watch-list accumulation
-    (per-address transfer totals, etl.rs watch/ctn path) kept current
-    across micro-batches.
-
-    Requires the RocksDB state store provider
-    (``session.use_rocksdb_state``) — transformWithState's state schema
-    evolution is built on it; that is also the provider a production
-    ingest would run (state spills to disk, changelog checkpointing).
-
-    Optional-dependency gate: the transformWithState Python protocol
-    speaks protobuf to the JVM state server; in environments without
-    ``google.protobuf`` this raises immediately (same boundary pattern as
-    the multimodal codecs) instead of failing mid-query —
-    :func:`running_counts` is the dependency-free equivalent.
-    """
-    try:
-        import google.protobuf  # noqa: F401 — the TWS state-server protocol
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithState needs the protobuf package (its Python<->JVM "
-            "state-server protocol); use running_counts/applyInPandasWithState "
-            "in this environment"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total long", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(
-            self, key: Tuple[Any, ...], rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n_new, amt_new = 0, 0
-            for b in rows:
-                n_new += len(b)
-                # NULL amounts are safe here without special-casing:
-                # pandas sums with skipna=True for every dtype nulls
-                # arrive as (float64 NaN, nullable Int64, object), and an
-                # all-null/empty column sums to scalar 0, which int()
-                # accepts — probed by the r13 adversarial audit
-                # (tests/test_adversarial_streaming.py), matching SUM()'s
-                # null semantics (nulls count toward n, not the sum).
-                # float accumulation across chunks, ONE truncation at
-                # the end: int() per pandas chunk accumulated error for
-                # fractional amounts (0.6 + 0.6 → 0 instead of 1), and
-                # Arrow batch boundaries made the loss replay-unstable
-                # (r15 review)
-                amt_new += b[amount_col].sum()
-            prev = self._totals.get() if self._totals.exists() else (0, 0)
-            n, tot = prev[0] + n_new, prev[1] + int(amt_new)
-            self._totals.update((n, tot))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "n_batch": [n_new],
-                    "n_total": [n],
-                    "amount_total": [tot],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_Totals(),
-        outputStructType="key string, n_batch long, n_total long, amount_total long",
-        outputMode="Update",
-        # TTL state REQUIRES TimeMode.ProcessingTime — under "None" the
-        # JVM raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL
-        # at query start, so the advertised ttl_ms could never work
-        # (r15 review; verified against Spark 4.1.2 error-conditions)
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )

@@ -2,11 +2,11 @@
 """Per-spec profiling harness for the optimization round.
 
 `python scripts/profile_spec.py l07 l12 ...` runs each named spec (exact
-name or prefix) with the bench methodology (warmup + N timed count() runs,
-clearCache between runs) and prints per-run walls, then dumps the
-AQE-FINAL executed plan (after the action) to stdout so ReusedExchange /
-runtime join rewrites are visible — `explain()` before execution only
-shows the initial plan.
+name or prefix; no names = every spec) with the bench methodology (warmup
++ N timed count() runs, clearCache between runs) and prints per-run
+walls, then dumps the AQE-FINAL executed plan (after the action) to
+stdout so ReusedExchange / runtime join rewrites are visible — `explain()`
+before execution only shows the initial plan.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      PROFILE_RUNS (default 5), PROFILE_PLAN (default 1; 0 = skip plan dump).
@@ -32,7 +32,7 @@ def main() -> None:
     spark = get_spark(app_name="profile_spec")
     specs = {
         n: s for n, s in all_specs().items()
-        if any(n == p or n.startswith(p) for p in prefixes)
+        if not prefixes or any(n.startswith(p) for p in prefixes)
     }
     for name, spec in sorted(specs.items()):
         spark.sparkContext.setJobDescription(f"profile:{name}:warmup")

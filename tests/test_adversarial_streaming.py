@@ -23,9 +23,8 @@ Probed and found ALREADY SAFE (pinned below so regressions surface):
 null keys in the applyInPandasWithState bodies (they form a key=None
 state group), null event time in the window family (dropped identically
 in batch and streaming), null key/ts in the interval join (three-valued
-condition → row drops), null header fields in the tail's dedup/reorg/
-stale checks (null-skipping joins and comparisons), and NULL amounts in
-``running_totals_tws``'s pandas sum (skipna for every arrival dtype).
+condition → row drops), and null header fields in the tail's dedup/reorg/
+stale checks (null-skipping joins and comparisons).
 """
 
 from __future__ import annotations
@@ -408,22 +407,6 @@ def test_first_seen_null_key_emitted_once(spark, tmp_path):
     rows = _run_stream(S.first_seen(sdf, "fp"), ckpt, "append")
     got = {r.key: r.n_dropped_dups for r in rows}
     assert got == {None: 1, "x": 0}
-
-
-def test_tws_amount_sum_null_safe_pandas_level():
-    # running_totals_tws is protobuf-gated in this environment, so its
-    # null-amount safety is pinned at the pandas level: int(col.sum())
-    # skips NA for every dtype nulls arrive as (float64 NaN, nullable
-    # Int64, object), and an all-null column sums to scalar 0 — no
-    # int(NaN) crash class exists here. If pandas ever changed the
-    # skipna default, this pin would catch it before the stage did.
-    import pandas as pd
-
-    assert int(pd.Series([1.0, None, 2.0]).sum()) == 3          # float64+NaN
-    assert int(pd.Series([1, None, 2], dtype="Int64").sum()) == 3
-    assert int(pd.Series([None, None], dtype="Int64").sum()) == 0
-    assert int(pd.Series([None, None], dtype=object).sum()) == 0
-    assert int(pd.Series([], dtype="float64").sum()) == 0
 
 
 # --- watermarked windows: null event time ------------------------------------

@@ -260,19 +260,6 @@ def test_detect_reorgs(lake, spark):
     assert hits == {20}
 
 
-def test_bucketed_join_has_no_shuffle(lake, spark):
-    """Both sides bucketed on the height key → the equi-join plans with
-    zero Exchange operators (co-located, shuffle-free)."""
-    bt = lake.write_bucketed("blocks", lake.blocks(), n_buckets=4)
-    tt = lake.write_bucketed("transactions", lake.transactions(), n_buckets=4)
-    b = spark.table(bt).select(F.col("number"), "hash")
-    t = spark.table(tt).select(F.col("block_number").alias("number"), "from_addr")
-    joined = b.hint("merge").join(t, "number")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, "bucketed join still shuffles"
-    assert joined.count() == lake.transactions().count()
-
-
 def test_compaction(spark, tmp_path):
     lk = Lake(spark, str(tmp_path / "cw"), bucket_size=20)
     raw = FX.raw_blocks(spark, n_blocks=40, txs_per_block=2)
@@ -320,13 +307,37 @@ def test_module_gating(spark, tmp_path):
 
 
 def test_idempotent_bucket_overwrite(lake, spark):
-    """Exactly-once story: re-writing the same bucket with dynamic overwrite
-    leaves counts unchanged (idempotent re-ingest after a crash)."""
+    """Exactly-once story: re-appending a whole committed bucket (30..39,
+    a crashed-and-retried delivery) leaves it unchanged — the natural-key
+    anti-join drops every redelivered row."""
     raw = FX.raw_blocks(spark, n_blocks=N_BLOCKS)
     blocks = T.normalize_blocks(raw).filter(F.col("number") >= 30)
-    lake.write("blocks", blocks, mode="overwrite")
+    lake.write("blocks", blocks)
     assert lake.blocks().count() == N_BLOCKS
+    assert lake.blocks().select("number").distinct().count() == N_BLOCKS
     assert lake.blocks().filter(F.col("number") >= 30).count() == 10
+
+
+def test_bucket_index_past_int_range_is_refused(spark, tmp_path):
+    """Reads declare ``block_bucket`` int, so a row whose bucket index is
+    2^31 or more must fail its write job before the commit, through
+    ``write`` and ``write_all`` alike; the lake keeps its rows and every
+    read of it still works. Before the guard such a row landed and every
+    later read failed with INVALID_PARTITION_VALUE."""
+    lk = Lake(spark, str(tmp_path / "big"), bucket_size=1)
+    blocks = T.normalize_blocks(FX.raw_blocks(spark, n_blocks=3))
+    lk.write_all(blocks)
+    far = blocks.filter(F.col("number") == 2).withColumn("number", F.lit(2**31))
+    with pytest.raises(Exception, match="block_bucket would not fit"):
+        lk.write("blocks", far)
+    with pytest.raises(Exception, match="block_bucket would not fit"):
+        lk.write_all(far, height_range=(2**31, 2**31), verified_hi=2**31)
+    assert set(lk._bucket_leaf_dirs("blocks")) == {0, 1, 2}
+    assert sorted(r.number for r in lk.blocks().collect()) == [0, 1, 2]
+    assert lk.block_by_number(2).count() == 1
+    assert lk.blocks_in_range(0).count() == 3
+    assert lk.latest_block_number() == 2
+    assert lk.resume_point() == 2
 
 
 def test_compact_concurrent_with_appends_loses_nothing(spark, tmp_path):

@@ -164,67 +164,3 @@ def test_stateful_ops_run_on_rocksdb_state_store(spark, tmp_path):
         spark.conf.unset(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         )
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithState (Spark 4 typed-state API): per-key count + amount
-    totals accumulate across two checkpointed availableNow runs — state
-    survives recovery exactly like the applyInPandasWithState path.
-    Skips where protobuf (the TWS state-server protocol) is unavailable;
-    the gate itself is asserted either way."""
-    import os
-
-    from core_etl_spark.session import use_rocksdb_state
-    from core_etl_spark.streaming.stateful import running_totals_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        df = spark.createDataFrame([], "fp string, source string, amount long")
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            running_totals_tws(df, "source", "amount")
-        pytest.skip("protobuf unavailable — gate asserted instead")
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    os.makedirs(src)
-
-    def drop(rows):
-        spark.createDataFrame(
-            rows, "fp string, source string, amount long"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    def run():
-        out: list = []
-        q = (
-            running_totals_tws(
-                spark.readStream.schema(
-                    "fp string, source string, amount long"
-                ).parquet(src),
-                "source",
-                "amount",
-            )
-            .writeStream.foreachBatch(lambda b, _i: out.extend(b.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        return out
-
-    use_rocksdb_state(spark)
-    try:
-        drop([("a", "s1", 10), ("b", "s1", 5), ("c", "s2", 7)])
-        got = {r.key: (r.n_total, r.amount_total) for r in run()}
-        assert got == {"s1": (2, 15), "s2": (1, 7)}
-        # second run: recovered state keeps accumulating; only touched
-        # keys emit
-        drop([("d", "s1", 1), ("e", "s3", 2)])
-        got = {r.key: (r.n_total, r.amount_total) for r in run()}
-        assert got == {"s1": (3, 16), "s3": (1, 2)}
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
