@@ -16,58 +16,3 @@ The engine is Spark SQL / DataFrame over partitioned Parquet:
 
 __version__ = "0.1.0"
 
-
-def accepts_extra_positional(fn, n_required: int) -> bool:
-    """True when ``fn`` can be called with ``n_required + 1`` positional
-    arguments — capability detection for optional positional hints by
-    INSPECTION (same rationale as :func:`accepts_kwarg`: a TypeError from
-    inside the callee must propagate, not silently select legacy
-    behavior). Unlike a keyword-name probe, this accepts providers whose
-    hint parameter is named anything (``tx_hashes``, ``hashes``, ...),
-    is positional-only, or arrives via ``*args`` (r16 review).
-    Uninspectable callables count as capable — a genuine mismatch then
-    fails loudly."""
-    import inspect
-
-    try:
-        sig = inspect.signature(fn)
-    except (TypeError, ValueError):
-        return True
-    n_positional = 0
-    for p in sig.parameters.values():
-        if p.kind is inspect.Parameter.VAR_POSITIONAL:
-            return True
-        if p.kind in (
-            inspect.Parameter.POSITIONAL_ONLY,
-            inspect.Parameter.POSITIONAL_OR_KEYWORD,
-        ):
-            n_positional += 1
-    return n_positional >= n_required + 1
-
-
-def accepts_kwarg(fn, name: str) -> bool:
-    """True when ``fn`` can be called with keyword argument ``name``.
-
-    Capability detection for optional provider/transport hints (the
-    ``receipts_for`` matched-hash hint, ``subscribe_blocks``'s stop event)
-    by INSPECTION rather than by catching TypeError around the real call
-    (ADVICE r15): a TypeError raised *inside* the callee's body must
-    propagate as the bug it is, not silently select degraded legacy
-    behavior. Uninspectable callables (C extensions) count as modern —
-    they get the hint, and a genuine signature mismatch then fails loudly.
-    """
-    import inspect
-
-    try:
-        sig = inspect.signature(fn)
-    except (TypeError, ValueError):
-        return True
-    for p in sig.parameters.values():
-        if p.kind is inspect.Parameter.VAR_KEYWORD:
-            return True
-        if p.name == name and p.kind in (
-            inspect.Parameter.POSITIONAL_OR_KEYWORD,
-            inspect.Parameter.KEYWORD_ONLY,
-        ):
-            return True
-    return False

@@ -549,7 +549,9 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("--modules", default="",
                    help="comma subset of blocks,transactions,token_transfers")
     e.add_argument("--chunk-size", type=int, default=100_000)
-    e.add_argument("--bucket-size", type=int, default=100_000)
+    e.add_argument("--bucket-size", type=int, default=None,
+                   help="heights per block_bucket partition; defaults to the "
+                        "size the warehouse recorded, else 100000")
     e.add_argument("--tail", default="", help="dir of streamed raw-block drops")
     e.add_argument("--checkpoint", default="./checkpoint")
     e.add_argument("-r", "--retention-duration", type=int, default=0,

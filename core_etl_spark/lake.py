@@ -18,13 +18,17 @@ This is the Spark-first replacement for the reference's storage backends
   Spark runs no schema-inference job before the query's own, and a point
   lookup is one job. A table with no rows yet reads as an empty frame with
   that same schema, so every lookup on a day-zero lake returns 0 rows.
-- **Mutations** (K6-K9): Parquet files are immutable, so every mutation is a
-  *partition-scoped* delete-and-rewrite — read ONLY the affected buckets
-  (partition-pruned scan), filter, stage the survivors and swap them in.
-  Nothing outside the touched partitions is ever rewritten; a reorg at the
-  tip costs one bucket regardless of table size. Fully-emptied buckets are
-  dropped at the directory level (the local-FS stand-in for a metastore
-  ``ALTER TABLE DROP PARTITION``).
+- **Mutations** (K7-K9, compaction): Parquet files are immutable, so reorg
+  clean, truncate, retention and compaction share one planner and one
+  writer. The plan comes from the directory layout and parquet footers,
+  never from a scan: bucket ``b`` holds heights ``[b·bs, (b+1)·bs − 1]``,
+  so a bucket lying wholly inside a deleted height range loses its leaf
+  dirs with no Spark job (the local-FS stand-in for a metastore
+  ``ALTER TABLE DROP PARTITION``), and a bucket the range only overlaps is
+  rewritten from its own leaf dirs: filter, stage the survivors, swap them
+  in. Nothing outside the touched buckets is read or rewritten; a reorg at
+  the tip costs one bucket regardless of table size. The warehouse records
+  its bucket size on the first mutation, since every plan derives from it.
 - **Maturity** (K6): recomputed, never stored — ``matured`` is
   ``number <= tip - depth`` (reference mutates rows in place,
   sqlite3.rs:213-228; a computed view is both cheaper and can't go stale).
@@ -37,6 +41,7 @@ This is the Spark-first replacement for the reference's storage backends
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import threading
@@ -47,6 +52,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .schemas import BLOCK_SCHEMA, TOKEN_TRANSFER_SCHEMA, TRANSACTION_SCHEMA
 
 DEFAULT_BUCKET_SIZE = 100_000
+#: rows per file a bucket rewrite aims for (``maxRecordsPerFile``)
+TARGET_ROWS_PER_FILE = 1_000_000
 MATURITY_DEPTH = 5  # reference etl.rs:171,253 — 5-block confirmation
 
 BLOCKS, TRANSACTIONS, TOKEN_TRANSFERS = "blocks", "transactions", "token_transfers"
@@ -136,6 +143,42 @@ def _release_writer_locks() -> None:
 atexit.register(_release_writer_locks)
 
 
+def _bucket_size_path(root: str) -> str:
+    return os.path.join(root, "_bucket_size")
+
+
+def _recorded_bucket_size(root: str) -> int | None:
+    """The bucket size the warehouse recorded on its first mutation, or
+    None when nothing has mutated it yet. A record that does not parse
+    raises: guessing a size would send reads to the wrong buckets."""
+    try:
+        with open(_bucket_size_path(root)) as f:
+            return int(json.load(f)["bucket_size"])
+    except FileNotFoundError:
+        return None
+
+
+def _contiguous_ranges(heights: Iterable[int]) -> list[tuple[int, int]]:
+    """Heights → maximal contiguous inclusive ``(lo, hi)`` runs, sorted."""
+    runs: list[tuple[int, int]] = []
+    for h in sorted(set(heights)):
+        if runs and h == runs[-1][1] + 1:
+            runs[-1] = (runs[-1][0], h)
+        else:
+            runs.append((h, h))
+    return runs
+
+
+def _parquet_files(leaf_dir: str) -> list[str]:
+    """Committed data files of one leaf dir (hidden in-flight files
+    skipped, as Hadoop's hiddenFileFilter does)."""
+    return [
+        os.path.join(leaf_dir, f)
+        for f in os.listdir(leaf_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 class Lake:
     """One warehouse: paths, writes, reads, and partition-scoped mutations."""
 
@@ -143,13 +186,19 @@ class Lake:
         self,
         spark: SparkSession,
         root: str,
-        bucket_size: int = DEFAULT_BUCKET_SIZE,
+        bucket_size: int | None = None,
         modules: tuple[str, ...] = ALL_MODULES,
     ) -> None:
+        """``bucket_size`` defaults to the size the warehouse recorded on
+        its first mutation (``DEFAULT_BUCKET_SIZE`` for a warehouse nothing
+        has mutated yet). A warehouse keeps one size: an explicit size that
+        disagrees with the recorded one raises ``ValueError``."""
+        recorded = _recorded_bucket_size(root)
         self.spark = spark
         self.root = root
-        self.bucket_size = bucket_size
+        self.bucket_size = bucket_size or recorded or DEFAULT_BUCKET_SIZE
         self.modules = tuple(modules)
+        self._check_bucket_size(recorded)
         #: serializes partition mutations against concurrent batch
         #: processing: the retention scheduler thread's stage-and-swap
         #: (rmtree + move of bucket dirs) must not race the streaming
@@ -166,25 +215,50 @@ class Lake:
         pays one O_CREAT|O_EXCL + ~40-byte write; every later mutation is
         a dict hit. Held until process exit (atexit); a crashed writer's
         sentinel is stale-detected by pid probe and broken by the next
-        writer, so no manual cleanup is ever needed."""
+        writer, so no manual cleanup is ever needed.
+
+        Under the lock, this Lake's first mutation also records its bucket
+        size at the warehouse root (tmp+rename), or raises ``ValueError``
+        when another Lake recorded a different one first."""
         from .operators.sketches import StoreLockedError, _store_lock
 
         key = os.path.abspath(self.root)
         with _WRITER_LOCKS_GUARD:
-            if key in _WRITER_LOCKS:
-                return
-            os.makedirs(key, exist_ok=True)
-            lk = _store_lock(os.path.join(key, ".writer"))
-            try:
-                lk.__enter__()
-            except StoreLockedError as e:
-                raise WarehouseLockedError(
-                    f"warehouse writer lock held: {key} — another process "
-                    "is writing this warehouse (two concurrent exports on "
-                    "one path interleave appends and the commit marker); "
-                    "stop it or point this job at its own warehouse root"
-                ) from e
-            _WRITER_LOCKS[key] = lk
+            if key not in _WRITER_LOCKS:
+                os.makedirs(key, exist_ok=True)
+                lk = _store_lock(os.path.join(key, ".writer"))
+                try:
+                    lk.__enter__()
+                except StoreLockedError as e:
+                    raise WarehouseLockedError(
+                        f"warehouse writer lock held: {key} — another process "
+                        "is writing this warehouse (two concurrent exports on "
+                        "one path interleave appends and the commit marker); "
+                        "stop it or point this job at its own warehouse root"
+                    ) from e
+                _WRITER_LOCKS[key] = lk
+            if not self._bucket_size_recorded:
+                self._record_bucket_size()
+
+    def _record_bucket_size(self) -> None:
+        recorded = _recorded_bucket_size(self.root)
+        if recorded is None:
+            path = _bucket_size_path(self.root)
+            tmp = f"{path}.tmp.{os.getpid()}"
+            with open(tmp, "w") as f:
+                json.dump({"bucket_size": int(self.bucket_size)}, f)
+            os.replace(tmp, path)
+            recorded = self.bucket_size
+        self._check_bucket_size(recorded)
+
+    def _check_bucket_size(self, recorded: int | None) -> None:
+        if recorded is not None and recorded != self.bucket_size:
+            raise ValueError(
+                f"warehouse {self.root} recorded bucket size {recorded}, but "
+                f"this Lake uses {self.bucket_size}: every height lives in "
+                "the bucket the recorded size gives it"
+            )
+        self._bucket_size_recorded = recorded is not None
 
     # --- layout --------------------------------------------------------------
 
@@ -276,7 +350,7 @@ class Lake:
           do not exist yet, the overlap is empty, and the anti-join is
           skipped entirely;
         - **footer rule**: with a ``height_range``, the anti-join is also
-          skipped when parquet footer statistics (``_footer_max`` — driver
+          skipped when parquet footer statistics (``_footer_stats`` — driver
           metadata, no job) prove every committed row of the touched
           buckets sits BELOW ``height_range[0]``. A redelivered row carries
           its own height, so rows below the batch cannot be copies of it.
@@ -321,7 +395,7 @@ class Lake:
         if not overlap:
             return out
         if height_range is not None:
-            maxes = [self._footer_max(name, committed[b]) for b in overlap]
+            maxes = [self._footer_stats(name, committed[b])[0] for b in overlap]
             if all(m is not None and m < height_range[0] for m in maxes):
                 return out
         keys = list(_NATURAL_KEY[name])
@@ -422,7 +496,8 @@ class Lake:
     # which a whole append GROUP committed; ``resume_point`` reads it, so a
     # torn range is always re-delivered (and the anti-join absorbs the
     # already-committed sinks). Atomic tmp+rename under the lake mutex;
-    # height-removing mutations clamp it back. A marker-less warehouse
+    # truncate lowers it to its cutoff before removing a row, and clean
+    # clamps it to the surviving tip. A marker-less warehouse
     # (pre-r15, or ad-hoc writes without a ``verified_hi``) falls back to
     # the legacy blocks-tip resume.
 
@@ -463,21 +538,6 @@ class Lake:
             return
         if prev is None or hi > prev:
             self._write_marker(hi)
-
-    def _clamp_marker(self) -> None:
-        """After a height-removing mutation the marker may exceed the real
-        tip; resuming from it would skip the re-fetch and leave a hole —
-        clamp it to the surviving tip."""
-        m = self._read_marker()
-        if m is None:
-            return
-        # the callers' per-table deletes early-return on absent tables, so
-        # this can be the mutation's FIRST write — it still needs the
-        # cross-process writer lock (r16 completeness pass)
-        self._ensure_writer_lock()
-        tip = self.latest_block_number()
-        if tip < m:
-            self._write_marker(tip)
 
     def resume_point(self) -> int:
         """Highest height through which ingest is known COMPLETE across all
@@ -599,43 +659,46 @@ class Lake:
                 leaves.setdefault(b, []).append(os.path.join(p, d))
         return leaves
 
-    def _footer_max(self, name: str, leaf_dirs: list[str]) -> int | None:
-        """Max height across one bucket's leaf dirs from parquet footer
-        statistics — pure driver-side metadata, no cluster job (the write
-        path sorts by height within partitions, so row-group min/max stats
-        are always present and tight). Returns None when stats are
-        unavailable and the caller must fall back to a scan."""
+    def _footer_stats(
+        self, name: str, leaf_dirs: list[str]
+    ) -> tuple[int | None, int | None]:
+        """``(max height, rows)`` across leaf dirs from parquet footers —
+        pure driver-side metadata, no cluster job (every write sorts by
+        height within partitions, so row-group min/max stats are present
+        and tight). The max is None when some row group carries no min/max
+        statistics or the dirs hold no row; both are None when a dir or a
+        footer cannot be read (a torn file). Either way a caller that needs
+        the missing figure falls back to a scan or leaves the bucket alone."""
         try:
             import pyarrow.parquet as pq
         except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-            return None
+            return None, None
         col = _NUMBER_COL[name]
-        best = None
+        best, rows, stats = None, 0, True
         for dirpath in leaf_dirs:
             try:
-                files = os.listdir(dirpath)
+                files = _parquet_files(dirpath)
             except OSError:
-                return None
-            for f in files:
-                if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                    continue
+                return None, None
+            for path in files:
                 try:
-                    md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
+                    md = pq.read_metadata(path)
                 except Exception:  # noqa: BLE001 — torn file → scan fallback
-                    return None
+                    return None, None
+                rows += md.num_rows
                 idx = next(
                     (i for i in range(md.num_columns)
                      if md.schema.column(i).name == col),
                     None,
                 )
-                if idx is None:
-                    return None
-                for rg in range(md.num_row_groups):
+                stats = stats and idx is not None
+                for rg in range(md.num_row_groups if stats else 0):
                     st = md.row_group(rg).column(idx).statistics
                     if st is None or not st.has_min_max:
-                        return None
+                        stats = False
+                        break
                     best = st.max if best is None else max(best, st.max)
-        return int(best) if best is not None else None
+        return (int(best) if stats and best is not None else None), rows
 
     def latest_block_number(self) -> int:
         """Resume point (reference etl.rs:84-89): max height with the Q1
@@ -656,7 +719,7 @@ class Lake:
                 leaves = self._bucket_leaf_dirs(name)
                 top = max(leaves) if leaves else None
                 if top is not None:
-                    m = self._footer_max(name, leaves[top])
+                    m, _ = self._footer_stats(name, leaves[top])
                     if m is not None:
                         return m
                 # read ONLY the top bucket's leaf dirs — skips the
@@ -678,181 +741,194 @@ class Lake:
 
         return with_maturity(self.blocks(), depth)
 
-    # --- partition-scoped delete-and-rewrite core --------------------------------
+    # --- one planner, one writer: every mutation (K7-K9, compaction) -----------
 
-    def _delete_where(self, name: str, heights_pred) -> None:
-        """Delete rows matching ``heights_pred(number_col)`` from ``name`` by
-        rewriting only the buckets that can contain them: the survivors are
-        staged to a scratch dir, then swapped in at the partition-directory
-        level (staged-then-move — the overwrite never races the read plan,
-        and a crash mid-swap loses no committed bucket)."""
-        if name not in self.modules or not self.exists(name):
-            return
+    def _delete_heights(self, ranges: list[tuple[int | None, int | None]]) -> None:
+        """Delete every row whose height lies in one of the inclusive
+        ``(lo, hi)`` ranges (``None`` is an open end) from every module
+        table, planned from the directory layout alone. Per table, a
+        committed bucket lying wholly inside one range loses its leaf dirs,
+        with no Spark job; a bucket a range only overlaps is rewritten
+        (``_rewrite_buckets``); every other bucket is neither read nor
+        touched. Rows with a NULL height live in the
+        ``__HIVE_DEFAULT_PARTITION__`` dir, which is no numbered bucket, so
+        they stay. Holds the writer lock and the mutex once for all
+        tables."""
+        bs = self.bucket_size
         self._ensure_writer_lock()
         with self.mutex:
-            self._delete_where_locked(name, heights_pred)
+            for name in self.modules:
+                rewrite = []
+                for b, dirs in self._bucket_leaf_dirs(name).items():
+                    first, last = b * bs, (b + 1) * bs - 1
+                    if any((lo is None or lo <= first) and (hi is None or last <= hi)
+                           for lo, hi in ranges):
+                        for d in dirs:
+                            shutil.rmtree(d, ignore_errors=True)
+                    elif any((lo is None or lo <= last) and (hi is None or first <= hi)
+                             for lo, hi in ranges):
+                        rewrite.append(b)
+                if not rewrite:
+                    continue
+                num = F.col(_NUMBER_COL[name])
+                doomed = F.lit(False)
+                for lo, hi in ranges:
+                    hit = F.lit(True)
+                    if lo is not None:
+                        hit = hit & (num >= lo)
+                    if hi is not None:
+                        hit = hit & (num <= hi)
+                    doomed = doomed | hit
+                self._rewrite_buckets(name, rewrite, ~doomed, TARGET_ROWS_PER_FILE)
 
-    def _delete_where_locked(self, name: str, heights_pred) -> None:
-        num = F.col(_NUMBER_COL[name])
-        df = self._scan(name)
-        buckets = [
-            r.block_bucket
-            for r in df.filter(heights_pred(num)).select("block_bucket").distinct().collect()
-        ]
-        if not buckets:
-            return
-        scoped = df.filter(F.col("block_bucket").isin(buckets))  # pruned scan
-        kept = scoped.filter(~heights_pred(num))
-        parts = _PARTITION_COLS[name]
+    def _rewrite_buckets(
+        self,
+        name: str,
+        buckets: list[int],
+        keep: F.Column | None,
+        target_rows_per_file: int,
+    ) -> None:
+        """Rewrite ``buckets`` of ``name`` from their own leaf dirs, keeping
+        the rows ``keep`` admits (every row when None), into
+        ``⌈rows/target⌉`` files, with ``rows`` from the footers. The rows
+        are range-partitioned on (layout columns, height), so an oversized
+        bucket spreads across several tasks instead of one writer, sorted
+        within each task by the same key, so every file stays ordered by
+        height with tight min/max statistics (``_drop_redelivered``'s
+        footer rule), and capped at ``maxRecordsPerFile`` even when one task
+        holds more than a file's worth. The survivors are staged, then
+        swapped in leaf dir by leaf dir; a bucket the stage holds nothing
+        of is dropped (the local-FS stand-in for ``ALTER TABLE DROP
+        PARTITION``). Callers hold the writer lock and the mutex."""
+        committed = self._bucket_leaf_dirs(name)
+        dirs = [d for b in buckets for d in committed.get(b, [])]
+        _, rows = self._footer_stats(name, dirs)
+        n_files = max(1, -(-(rows or 0) // target_rows_per_file))
+        df = self._scan(name, dirs)
+        if keep is not None:
+            df = df.filter(keep)
+        key = [F.col(c) for c in _PARTITION_COLS[name]] + [F.col(_NUMBER_COL[name])]
         stage = os.path.join(self.root, f".stage_{name}_{os.urandom(6).hex()}")
         (
-            kept.repartition(*[F.col(c) for c in parts])
-            .sortWithinPartitions(_NUMBER_COL[name])
+            df.repartitionByRange(n_files, *key)
+            .sortWithinPartitions(*key)
             .write.mode("overwrite")
-            .partitionBy(*parts)
+            .option("maxRecordsPerFile", target_rows_per_file)
+            .partitionBy(*_PARTITION_COLS[name])
             .parquet(stage)
         )
         try:
-            self._swap_buckets(name, stage, set(buckets))
+            staged = self._bucket_leaf_dirs(name, stage)
+            for b in buckets:
+                for d in committed.get(b, []):
+                    shutil.rmtree(d, ignore_errors=True)
+                for src in staged.get(b, []):
+                    dst = os.path.join(self.path(name), os.path.relpath(src, stage))
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    shutil.rmtree(dst, ignore_errors=True)
+                    shutil.move(src, dst)
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    def _swap_buckets(self, name: str, stage: str, buckets: set[int]) -> None:
-        """Replace every affected bucket's leaf dir with its staged rewrite;
-        affected buckets absent from the stage became empty → dropped (the
-        local-FS stand-in for ``ALTER TABLE DROP PARTITION``)."""
-        target = self.path(name)
-        committed = self._bucket_leaf_dirs(name)
-        staged = self._bucket_leaf_dirs(name, stage)
-        for b in buckets:
-            for d in committed.get(b, []):
-                shutil.rmtree(d, ignore_errors=True)
-            for src in staged.get(b, []):
-                dst = os.path.join(target, os.path.relpath(src, stage))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.rmtree(dst, ignore_errors=True)
-                shutil.move(src, dst)
-
     # --- reorg cleanup (K7) --------------------------------------------------------
 
-    def clean_block_data(self, number: int) -> None:
-        """Remove one block's rows across all modules (reference
+    def clean_blocks(self, numbers: Iterable[int]) -> None:
+        """Remove a set of heights across all modules (reference
         sqlite3.rs:272-325 runs transactional DELETEs over blocks, txs, and
-        every catalog-discovered transfer table). One bucket rewrite per
-        table."""
-        for name in self.modules:
-            self._delete_where(name, lambda c: c == F.lit(number))
-        self._clamp_marker()
-
-    def clean_blocks(self, numbers: list[int]) -> None:
-        """Batch form of :func:`clean_block_data`: remove a SET of heights
-        in one bucket-scoped rewrite pass per table (the integrity sweep
-        repairs many flagged heights at once — per-height calls would pay
-        one staged-swap per height per table; ADVICE r15)."""
-        numbers = [int(n) for n in numbers]
-        if not numbers:
+        every catalog-discovered transfer table): one bucket rewrite per
+        table and touched bucket, whatever the number of heights. Then the
+        commit marker is clamped to the surviving tip, so a cleaned tip is
+        re-fetched on resume."""
+        ranges = _contiguous_ranges(int(n) for n in numbers)
+        if not ranges:
             return
-        for name in self.modules:
-            self._delete_where(name, lambda c: c.isin(numbers))
-        self._clamp_marker()
+        self._ensure_writer_lock()
+        with self.mutex:
+            self._delete_heights(ranges)
+            m = self._read_marker()
+            if m is not None:
+                tip = self.latest_block_number()
+                if tip < m:
+                    self._write_marker(tip)
 
     # --- truncate last N (K8) --------------------------------------------------------
 
     def truncate_from_last_saved(self, n: int) -> None:
         """Delete the top-N heights: ``number > max(number) - n`` per table
         (reference sqlite3.rs:327-392 scalar-subquery DELETE; crash recovery
-        truncates 100, export.rs:62)."""
+        truncates 100, export.rs:62). The commit marker drops to the cutoff
+        before any table is touched: a truncate that crashes partway then
+        leaves resume below every height it removed, never above a hole."""
         tip = self.latest_block_number()
         if tip < 0:
             return
         cutoff = tip - n
-        for name in self.modules:
-            self._delete_where(name, lambda c: c > F.lit(cutoff))
-        self._clamp_marker()
+        self._ensure_writer_lock()
+        with self.mutex:
+            m = self._read_marker()
+            if m is not None and m > cutoff:
+                self._write_marker(cutoff)
+            self._delete_heights([(cutoff + 1, None)])
 
     # --- retention cleanup (K9) -------------------------------------------------------
 
     def retention_cleanup(self, cutoff_unix: int) -> None:
         """Drop data older than the cutoff (reference sqlite3.rs:483-536:
         periodic ``DELETE WHERE created_at < now - retention`` over every
-        table). Heights are time-ordered, so the cutoff maps to one boundary
-        height; whole buckets below it are dropped at the partition level and
-        only the boundary bucket is rewritten."""
+        table). Heights are time-ordered, so one aggregate over the blocks
+        table maps the cutoff to a boundary height; every table then loses
+        the heights up to it, whole buckets at the directory level and only
+        the bucket holding the boundary by a rewrite."""
+        if BLOCKS not in self.modules or not self.exists(BLOCKS):
+            return
         self._ensure_writer_lock()
         with self.mutex:  # one consistent sweep vs the streaming tail
-            blocks = self.blocks()
-            if BLOCKS in self.modules and self.exists(BLOCKS):
-                row = (
-                    blocks.filter(F.col("timestamp") < F.lit(cutoff_unix))
-                    .agg(F.max("number").alias("m"))
-                    .first()
-                )
-                if row is None or row.m is None:
-                    return
-                boundary = int(row.m)
-            else:
-                return
-            for name in self.modules:
-                self._delete_where(name, lambda c: c <= F.lit(boundary))
+            # max(number) as a top-1: each task keeps its own largest
+            # height and the driver merges them, one job with no shuffle
+            top = (
+                self._scan(BLOCKS)
+                .filter((F.col("timestamp") < F.lit(cutoff_unix))
+                        & F.col("number").isNotNull())
+                .select("number")
+                .orderBy(F.desc("number"))
+                .first()
+            )
+            if top is not None:
+                self._delete_heights([(None, int(top.number))])
 
     # --- compaction ---------------------------------------------------------------
 
-    def compact(self, name: str, target_rows_per_file: int = 1_000_000) -> int:
+    def compact(self, name: str, target_rows_per_file: int = TARGET_ROWS_PER_FILE) -> int:
         """Compact small files: streaming appends leave one file per
         micro-batch per partition; a month of 7-second blocks is ~370k tiny
-        files — scan-killing at 100 TB. Rewrites each bucket whose file
-        count exceeds rows/target into ⌈rows/target⌉ files (same
-        staged-then-move swap as the mutations, so readers never see a
-        half-compacted bucket). Returns the number of buckets rewritten."""
+        files — scan-killing at 100 TB. A bucket is rewritten when one of
+        its leaf dirs holds more than ``max(1, ⌈rows/target⌉)`` files, into
+        that many (same stage-then-swap as the deletes, so readers never see
+        a half-compacted bucket). The decision reads no data: file counts
+        come from the listing, and row counts from the footers of leaf
+        dirs holding more than one file, so a settled lake costs no Spark
+        job. Returns the number of buckets rewritten."""
         if name not in self.modules or not self.exists(name):
             return 0
-        # The whole scan→stage→swap must hold the lake mutex: a micro-batch
-        # append committed between the scan and the swap would land in a
-        # bucket the swap then replaces with the stale staged rewrite,
-        # silently dropping the committed rows (same discipline as
-        # _delete_where and retention_cleanup).
+        # The listing→stage→swap must hold the lake mutex: a micro-batch
+        # append committed in between would land in a bucket the swap then
+        # replaces with the stale staged rewrite, silently dropping the
+        # committed rows.
         self._ensure_writer_lock()
         with self.mutex:
-            df = self._scan(name)
-            per_bucket = (
-                df.withColumn("_file", F.input_file_name())
-                .groupBy("block_bucket")
-                .agg(
-                    F.count("*").alias("_rows"),
-                    F.count_distinct("_file").alias("_files"),
-                )
-                .collect()
-            )
-            todo = [
-                (r.block_bucket, int(r._rows))
-                for r in per_bucket
-                if r._files > max(1, -(-int(r._rows) // target_rows_per_file))
-            ]
-            if not todo:
-                return 0
-            buckets = [b for b, _ in todo]
-            scoped = df.filter(F.col("block_bucket").isin(buckets))
-            parts = _PARTITION_COLS[name]
-            num = _NUMBER_COL[name]
-            n_files = max(1, -(-sum(r for _, r in todo) // target_rows_per_file))
-            stage = os.path.join(self.root, f".stage_{name}_{os.urandom(6).hex()}")
-            # Range-partition on (partition cols, number): an oversized bucket
-            # spreads across several sorted tasks instead of collapsing to one
-            # writer, and maxRecordsPerFile enforces the per-file target even
-            # when a single task still holds more than one file's worth.
-            (
-                scoped.repartitionByRange(n_files, *[F.col(c) for c in parts], F.col(num))
-                .sortWithinPartitions(num)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", target_rows_per_file)
-                .partitionBy(*parts)
-                .parquet(stage)
-            )
-            try:
-                self._swap_buckets(name, stage, set(buckets))
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
-            return len(buckets)
+            todo = []
+            for b, dirs in self._bucket_leaf_dirs(name).items():
+                for d in dirs:
+                    n_files = len(_parquet_files(d))
+                    if n_files < 2:
+                        continue
+                    _, rows = self._footer_stats(name, [d])
+                    if rows is not None and n_files > max(1, -(-rows // target_rows_per_file)):
+                        todo.append(b)
+                        break
+            if todo:
+                self._rewrite_buckets(name, todo, None, target_rows_per_file)
+            return len(todo)
 
     # --- reorg detection (K10) -----------------------------------------------------
 

@@ -27,7 +27,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .lake import Lake
+from .lake import Lake, _contiguous_ranges
 from .operators.decode import extract_token_transfers
 from .operators.transforms import normalize_blocks, normalize_transactions
 
@@ -63,7 +63,7 @@ def ingest_raw(
     lake: Lake,
     raw: DataFrame,
     watch_contracts: tuple[str, ...] = (),
-    receipts_for: Callable[[DataFrame], DataFrame] | None = None,
+    receipts_for: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     height_range: tuple[int, int] | None = None,
     verified_hi: int | None = None,
 ) -> None:
@@ -90,17 +90,9 @@ def ingest_raw(
             # Receipts for MATCHED transfer calls only (the reference's
             # shape, etl.rs:357-360) — fetching for every tx in the chunk
             # fired orders of magnitude more RPCs than the decode ever
-            # joins (r15 review). The hint is advisory: providers that
-            # predate it fall back to the full sweep — detected by
-            # signature INSPECTION, not by catching TypeError around the
-            # real call (ADVICE r15: a TypeError raised inside a modern
-            # receipts_for would silently re-run the full per-tx sweep
-            # and mask the bug). The probe checks arity, not a parameter
-            # NAME, so a provider whose hint parameter is named anything
-            # (or is positional-only / *args) still gets the narrowed
-            # fetch (r16 review). The fixture provider accepts-and-
-            # ignores the hint (deterministic local generation).
-            from . import accepts_extra_positional
+            # joins (r15 review). Every receipts_for takes the matched
+            # hashes as its second argument; the fixture sources accept
+            # and ignore it (deterministic local generation).
             from .operators.decode import is_transfer_call
 
             cand = None
@@ -108,10 +100,7 @@ def ingest_raw(
                 p_ = is_transfer_call(F.col("input"), F.col("to_addr"), c)
                 cand = p_ if cand is None else (cand | p_)
             matched = txs.filter(cand).select(F.col("hash").alias("tx_hash"))
-            if accepts_extra_positional(receipts_for, 1):
-                receipts = receipts_for(raw, matched)
-            else:
-                receipts = receipts_for(raw)
+            receipts = receipts_for(raw, matched)
             # materialized ONCE: each watched contract's extract branch
             # joins this same frame — without the checkpoint the whole
             # receipt RPC sweep re-executed per contract (r15 review)
@@ -262,18 +251,6 @@ def wait_until_synced(provider, poll_seconds: float = 60.0, max_polls: int | Non
         log.info("node still syncing; next poll in %.0fs", poll_seconds)
         _time.sleep(poll_seconds)
     return True
-
-
-def _contiguous_ranges(heights: list[int]) -> list[tuple[int, int]]:
-    """Sorted heights → maximal contiguous [lo, hi] runs (one fetch per
-    run instead of one RPC round per height)."""
-    runs: list[tuple[int, int]] = []
-    for h in sorted(set(heights)):
-        if runs and h == runs[-1][1] + 1:
-            runs[-1] = (runs[-1][0], h)
-        else:
-            runs.append((h, h))
-    return runs
 
 
 def repair_unverifiable_blocks(

@@ -241,7 +241,7 @@ def _temp_lake(spark: SparkSession, n_blocks: int, bucket: int = 25):
         SELECT CAST(number AS BIGINT) AS number, hash, parent_hash, ts,
                CAST(2 AS BIGINT) AS n_txs
         FROM b
-        WHERE number <> 42      -- clean_block_data(42)
+        WHERE number <> 42      -- clean_blocks([42])
           AND number <= 99 - 30 -- truncate_from_last_saved(30): tip stays 99
     """,
     tags=("k7", "k8", "maintenance", "mutation"),
@@ -255,7 +255,7 @@ def k78(spark: SparkSession, t: dict[str, DataFrame]) -> DataFrame:
     with _shuffle_partitions(spark, 8):
         lake, root = _temp_lake(spark, n_blocks=100)
         try:
-            lake.clean_block_data(42)
+            lake.clean_blocks([42])
             lake.truncate_from_last_saved(30)
             final = lake.blocks().select(
                 "number", "hash", "parent_hash", F.col("timestamp").alias("ts")

@@ -184,10 +184,12 @@ def _tx_struct(num, i, dirty: bool = False):
     )
 
 
-def receipts(raw: DataFrame) -> DataFrame:
+def receipts(raw: DataFrame, tx_hashes: DataFrame | None = None) -> DataFrame:
     """(tx_hash, status) receipt set: deterministic failures every 17th tx
     (feeds the T8 status join; reference fetches these per-tx over RPC,
-    provider.rs:76-89)."""
+    provider.rs:76-89). ``tx_hashes`` is the ``receipts_for`` narrowing
+    hint; generation is local and cheap, so it is ignored and every tx
+    gets a receipt."""
     tx = raw.select(F.explode("transactions").alias("t")).select(
         F.col("t.hash").alias("tx_hash")
     )

@@ -33,18 +33,7 @@ import threading
 
 from pyspark.sql import SparkSession
 
-from .. import accepts_kwarg
 from .tail import RAW_BLOCK_DDL
-
-
-def _inspectable(fn) -> bool:
-    import inspect
-
-    try:
-        inspect.signature(fn)
-        return True
-    except (TypeError, ValueError):
-        return False
 
 log = logging.getLogger(__name__)
 
@@ -53,8 +42,8 @@ class HeadPoller:
     """Daemon thread: subscription → raw-block parquet drops.
 
     ``transport`` is a :class:`~core_etl_spark.sources.ws.WsJsonRpcTransport`
-    (or any object with ``subscribe_blocks()`` and ``(method, params) ->
-    json`` calling). ``batch_size`` > 1 coalesces consecutive heads into one
+    (or any object with ``subscribe_blocks(stop=)`` and ``(method, params)
+    -> json`` calling). ``batch_size`` > 1 coalesces consecutive heads into one
     drop (fewer files when the chain bursts); ``max_blocks`` stops after N
     blocks (tests; production runs until ``stop()``).
     """
@@ -114,26 +103,9 @@ class HeadPoller:
 
     def _run(self) -> None:
         pending: list[dict] = []
-        # Legacy-signature detection by INSPECTION, not by catching
-        # TypeError around the real call (ADVICE r15): a TypeError raised
-        # *inside* a stop-aware subscribe_blocks would silently degrade to
-        # a stop-less subscription, and HeadPoller.stop() would then block
-        # forever on a quiet chain — masking the real bug. Uninspectable
-        # callables (accepts_kwarg can't see a signature) get ONE
-        # call-site retry without the kwarg: calling with an unexpected
-        # keyword raises before a generator body executes, so that narrow
-        # catch can only ever mask a signature mismatch, not a callee bug
-        # — and without it a signature-less legacy transport killed the
-        # daemon outright (r16 review).
-        if accepts_kwarg(self.transport.subscribe_blocks, "stop"):
-            try:
-                heads = self.transport.subscribe_blocks(stop=self._stop)
-            except TypeError:
-                if _inspectable(self.transport.subscribe_blocks):
-                    raise  # the signature really accepts stop= — a real bug
-                heads = self.transport.subscribe_blocks()
-        else:  # transports predating the stop-aware signature
-            heads = self.transport.subscribe_blocks()
+        # the stop event lets a quiet subscription wake and end, so stop()
+        # never waits on a chain that produces no heads
+        heads = self.transport.subscribe_blocks(stop=self._stop)
         try:
             for head in heads:
                 if self._stop.is_set():

@@ -103,7 +103,7 @@ def _pick_headers(
 def make_tail_batch_processor(
     lake: Lake,
     watch_contracts: tuple[str, ...] = (),
-    receipts_for: Callable[[DataFrame], DataFrame] | None = None,
+    receipts_for: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """The ``foreachBatch`` body. Pure batch logic — unit-testable without a
     running stream by calling it with any raw-blocks DataFrame."""
@@ -183,7 +183,7 @@ def start_tail(
     source_dir: str,
     checkpoint_dir: str,
     watch_contracts: tuple[str, ...] = (),
-    receipts_for: Callable[[DataFrame], DataFrame] | None = None,
+    receipts_for: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     trigger_interval: str | None = None,
 ):
     """O2 — wire the stream to the batch processor with exactly-once

@@ -16,12 +16,15 @@ Legs, all on a victim lake with bucket_size=100:
    crashed-and-retried shape, now on a DIRTY chunk (NULL tx fields ride
    the anti-join keys' non-null columns);
 3. dirty streaming tail 2400..2999 in 5 micro-batch files of 100;
-4. K10 reorg detection: an incoming fork at 2990..2999 (wrong hashes)
-   over stored blocks that include NULL-hash rows (num % 17 == 3) —
-   IS-DISTINCT-FROM must flag exactly the forked heights, never the
-   NULL-hash coincidences;
-5. K8 staged-swap truncate of the top 150 heights (crosses buckets 28/29)
-   and re-backfill of the gap (resume picks 2850).
+4. K10 reorg detection with the fork rule the streaming tail runs
+   (``Lake.block_hashes_at`` + ``maintenance.forked_heights``): an
+   incoming fork at 2990..2999 (wrong hashes) over stored blocks that
+   include NULL-hash rows (num % 17 == 3) — IS-DISTINCT-FROM must flag
+   exactly the forked heights, never the NULL-hash coincidences;
+5. K8 truncate of the top 150 heights (drops bucket 29, rewrites bucket
+   28) with a crash injected after the blocks table is done, then a
+   resumed backfill, which must start at the cutoff (2850) and heal the
+   tables the crash left half-truncated.
 
 End-state check: every table of the victim must be ROW-IDENTICAL to a
 control lake built by one straight dirty backfill 0..2999 — the digest
@@ -43,7 +46,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from core_etl_spark.lake import Lake
+from core_etl_spark.lake import BLOCKS, Lake
+from core_etl_spark.operators.maintenance import forked_heights
 from core_etl_spark.pipeline import backfill, ingest_raw
 from core_etl_spark.session import get_spark
 from core_etl_spark.sources.fixtures import WATCH_CONTRACT, raw_blocks, receipts
@@ -110,7 +114,7 @@ def main() -> None:
         assert rec["tip"] == nb - 1, rec
 
         # leg 4: K10 under NULL hashes — fork the top 10 heights
-        forked_heights = list(range(nb - 10, nb))
+        forks = list(range(nb - 10, nb))
         incoming = (
             raw_blocks(spark, n_blocks=nb, txs_per_block=tpb, dirty=True)
             .filter(F.col("number") >= nb - 10)
@@ -122,9 +126,9 @@ def main() -> None:
             )
         )
         t0 = time.monotonic()
-        flagged = sorted(
-            r[0] for r in victim.detect_reorgs(incoming).collect()
-        )
+        headers = [tuple(r) for r in incoming.select("number", "hash", "parent_hash").collect()]
+        stored = victim.block_hashes_at({h for n, _, _ in headers for h in (n, n - 1)})
+        flagged = sorted(forked_heights(stored, headers))
         rec["k10_s"] = round(time.monotonic() - t0, 1)
         rec["k10_flagged"] = len(flagged)
         print(f"leg4 reorg detect: {flagged[:3]}..{flagged[-1:]} ({rec['k10_s']}s)", flush=True)
@@ -134,14 +138,32 @@ def main() -> None:
         # parent-mismatch only fires on DEFINITE disagreement (r15 — this
         # soak caught the r14 flag-on-unknowable-parent deleting a block
         # the stream could never restore)
-        assert set(forked_heights) <= set(flagged), (forked_heights, flagged)
+        assert set(forks) <= set(flagged), (forks, flagged)
         assert min(flagged) >= nb - 11, flagged  # parent-mismatch edge only
 
-        # leg 5: staged-swap truncate + resume re-backfill
+        # leg 5: a truncate that crashes once the blocks table is done, then
+        # resume: the commit marker already sits at the cutoff, so the
+        # backfill re-fetches every height the crash left missing anywhere
+        real_scan = victim._scan
+
+        def crash_after_blocks(name, dirs=None):
+            if name != BLOCKS:
+                raise RuntimeError("crash injected mid-truncate")
+            return real_scan(name, dirs)
+
+        victim._scan = crash_after_blocks
         t0 = time.monotonic()
-        victim.truncate_from_last_saved(trunc)
+        try:
+            victim.truncate_from_last_saved(trunc)
+        except RuntimeError as e:
+            print(f"leg5 truncate crashed as injected: {e}", flush=True)
+        else:
+            raise AssertionError("the injected truncate crash never fired")
+        finally:
+            del victim._scan
         rec["truncate_s"] = round(time.monotonic() - t0, 1)
         assert victim.latest_block_number() == nb - 1 - trunc
+        assert victim.resume_point() == nb - 1 - trunc, victim.resume_point()
         t0 = time.monotonic()
         provider_full = FixtureBlockProvider(n_blocks=nb, txs_per_block=tpb, dirty=True)
         n2 = backfill(spark, victim, provider_full, (WATCH_CONTRACT,), chunk_size=chunk)

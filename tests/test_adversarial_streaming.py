@@ -189,7 +189,7 @@ class _StubTransport:
         self._heads = heads
         self._replies = replies or {}
 
-    def subscribe_blocks(self):
+    def subscribe_blocks(self, stop=None):
         return iter(self._heads)
 
     def __call__(self, method, params_json):

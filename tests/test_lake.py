@@ -197,17 +197,29 @@ def test_maturity_recompute(lake):
     assert rows[0] == 1 and rows[N_BLOCKS - 1] == 0
 
 
-def test_clean_block_data(lake):
+def test_clean_blocks(lake):
     victim = 17
     before_tx = lake.transactions().count()
     tx_in_block = lake.transactions().filter(F.col("block_number") == victim).count()
-    lake.clean_block_data(victim)
+    lake.clean_blocks([victim])
     assert lake.blocks().filter(F.col("number") == victim).count() == 0
     assert lake.blocks().count() == N_BLOCKS - 1
     assert lake.transactions().count() == before_tx - tx_in_block
     assert lake.token_transfers().filter(F.col("block_number") == victim).count() == 0
     # untouched neighbors survive
     assert lake.blocks().filter(F.col("number").isin(16, 18)).count() == 2
+    # the rewritten bucket's files stay sorted by height with footer
+    # statistics, so the redelivery footer rule still holds on them
+    import pyarrow.parquet as pq
+
+    for name, col in (("blocks", "number"), ("transactions", "block_number")):
+        dirs = lake._bucket_leaf_dirs(name)[1]
+        assert lake._footer_stats(name, dirs)[0] == 19, name
+        for d in dirs:
+            for f in os.listdir(d):
+                if f.endswith(".parquet"):
+                    heights = pq.read_table(os.path.join(d, f), columns=[col])[col]
+                    assert heights.to_pylist() == sorted(heights.to_pylist()), name
 
 
 def test_truncate_from_last_saved(lake):
@@ -231,6 +243,77 @@ def test_retention_cleanup(lake):
     assert not os.path.exists(os.path.join(lake.path("blocks"), "block_bucket=0"))
     assert not os.path.exists(os.path.join(lake.path("blocks"), "block_bucket=1"))
     assert os.path.exists(os.path.join(lake.path("blocks"), "block_bucket=2"))
+
+
+def _jobs_run(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_whole_bucket_truncate_runs_no_job(lake, spark):
+    """Truncating exactly the top bucket is planned from the directory
+    layout and the tip's footers and drops the bucket's leaf dirs: no
+    Spark job (a decision scan plus a rewrite per table ran 12)."""
+    assert _jobs_run(spark, "lake-truncate-whole-bucket",
+                     lambda: lake.truncate_from_last_saved(BUCKET)) == 0
+    assert lake.latest_block_number() == N_BLOCKS - 1 - BUCKET
+    assert lake.resume_point() == N_BLOCKS - 1 - BUCKET
+    for name in ALL_MODULES:
+        assert sorted(lake._bucket_leaf_dirs(name)) == [0, 1, 2], name
+    assert lake.blocks().count() == N_BLOCKS - BUCKET
+    assert lake.transactions().agg(F.max("block_number")).first()[0] == 29
+
+
+def test_bucket_boundary_retention_runs_one_job(lake, spark):
+    """A retention cutoff that falls on a bucket boundary expires whole
+    buckets only, so the sweep runs one job, its timestamp-to-height
+    aggregate, and drops leaf dirs for the rest (14 jobs before)."""
+    cutoff = FX._EPOCH + 7 * 2 * BUCKET  # heights 0..19 expire
+    assert _jobs_run(spark, "lake-retention-boundary",
+                     lambda: lake.retention_cleanup(cutoff)) == 1
+    for name in ALL_MODULES:
+        assert sorted(lake._bucket_leaf_dirs(name)) == [2, 3], name
+    assert lake.blocks().agg(F.min("number")).first()[0] == 2 * BUCKET
+    assert lake.transactions().count() == (N_BLOCKS - 2 * BUCKET) * 4
+
+
+def test_compact_settled_lake_runs_no_job(lake, spark):
+    """On a lake whose buckets already hold one file per leaf dir,
+    ``compact`` decides from the file listing alone: no footer read of a
+    one-file bucket and no Spark job (a whole-table scan ran 3)."""
+    for name in ALL_MODULES:
+        assert _jobs_run(spark, f"lake-compact-settled-{name}",
+                         lambda: lake.compact(name)) == 0, name
+    assert lake.blocks().count() == N_BLOCKS
+
+
+def test_warehouse_keeps_one_bucket_size(spark, tmp_path):
+    """The first mutation records the bucket size at the warehouse root;
+    a lake opened without a size uses it, and an explicit size that
+    disagrees is refused, since reads and rewrites derive the bucket of a
+    height from it."""
+    root = str(tmp_path / "sized")
+    fresh = Lake(spark, root)
+    assert fresh.bucket_size == 100_000  # nothing recorded yet
+    _fill(spark, Lake(spark, root, bucket_size=BUCKET), 20)
+    reopened = Lake(spark, root)
+    assert reopened.bucket_size == BUCKET
+    assert [r.number for r in reopened.block_by_number(15).collect()] == [15]
+    assert reopened.block_transactions(15).count() == 4
+    assert Lake(spark, root, bucket_size=BUCKET).bucket_size == BUCKET
+    with pytest.raises(ValueError, match="bucket size"):
+        Lake(spark, root, bucket_size=100_000)
+    # a lake opened before the size was recorded cannot mutate with another
+    with pytest.raises(ValueError, match="bucket size"):
+        fresh.truncate_from_last_saved(1)
+    assert reopened.blocks().count() == 20
 
 
 def test_detect_reorgs(lake, spark):

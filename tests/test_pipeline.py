@@ -145,6 +145,12 @@ def _fake_chain(n: int) -> list[dict]:
     return blocks
 
 
+def _shown_rows(out: str) -> int:
+    """Data rows in a ``DataFrame.show`` table (bordered lines minus the
+    header)."""
+    return sum(1 for line in out.splitlines() if line.startswith("|")) - 1
+
+
 def test_cli_export_view_verify(spark, tmp_path, capsys):
     wh = str(tmp_path / "wh")
     rc = cli.main([
@@ -159,6 +165,13 @@ def test_cli_export_view_verify(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "7" in out and "hash" in out
 
+    # view opens the warehouse with the bucket size export recorded, so a
+    # height past the first bucket is found
+    assert cli.main(["--warehouse", wh, "view", "block", "--number", "15"]) == 0
+    assert _shown_rows(capsys.readouterr().out) == 1
+    assert cli.main(["--warehouse", wh, "view", "transactions", "--block", "15"]) == 0
+    assert _shown_rows(capsys.readouterr().out) == 4
+
     assert cli.main(["--warehouse", wh, "view", "token-transfers",
                      "--token", FX.WATCH_CONTRACT]) == 0
     assert FX.WATCH_CONTRACT in capsys.readouterr().out
@@ -167,9 +180,17 @@ def test_cli_export_view_verify(spark, tmp_path, capsys):
     assert "contiguous" in capsys.readouterr().out
 
     # knock a hole in the chain → verify fails
-    Lake(spark, wh, bucket_size=10).clean_block_data(12)
+    Lake(spark, wh, bucket_size=10).clean_blocks([12])
     assert cli.main(["--warehouse", wh, "verify", "blocks"]) == 1
     assert "gap" in capsys.readouterr().out
+
+    # a later export without --bucket-size keeps the recorded size
+    assert cli.main(["--warehouse", wh, "export", "--fixture", "30",
+                     "--chunk-size", "10"]) == 0
+    assert "backfilled 5 blocks; tip=29" in capsys.readouterr().out
+    tops = spark.read.parquet(f"{wh}/blocks").groupBy("block_bucket").agg(
+        F.max("number").alias("m"))
+    assert {r.block_bucket: r.m for r in tops.collect()} == {0: 9, 1: 19, 2: 29}
 
     # missing selector args are loud errors, not silent empty tables
     # (a NULL filter matched nothing and printed headers only — r16 review)
@@ -740,6 +761,40 @@ def test_truncate_clamps_commit_marker(spark, tmp_path):
     assert lake.blocks().select("number").distinct().count() == 30
 
 
+def test_torn_truncate_never_strands_heights_above_the_marker(spark, tmp_path):
+    """A truncate that crashes after some tables are done must not leave
+    the commit marker above the heights it already removed: the marker
+    drops to the cutoff before any table is touched, so the next backfill
+    re-fetches them and the warehouse ends row-identical to a control."""
+    from core_etl_spark.lake import TRANSACTIONS
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
+    provider = FixtureBlockProvider(n_blocks=30, txs_per_block=2)
+    P.backfill(spark, lake, provider, (FX.WATCH_CONTRACT,), chunk_size=10)
+    assert lake.resume_point() == 29
+    real_scan = lake._scan
+
+    def crash_at_transactions(name, dirs=None):
+        if name == TRANSACTIONS:
+            raise RuntimeError("crash injected mid-truncate")
+        return real_scan(name, dirs)
+
+    lake._scan = crash_at_transactions
+    try:
+        with pytest.raises(RuntimeError, match="mid-truncate"):
+            lake.truncate_from_last_saved(7)
+    finally:
+        del lake._scan
+    assert lake.latest_block_number() == 22  # blocks truncated, txs not
+    assert lake.resume_point() <= 22
+    assert P.backfill(spark, lake, provider, (FX.WATCH_CONTRACT,)) > 0
+    assert lake.resume_point() == 29
+
+    control = Lake(spark, str(tmp_path / "control"), bucket_size=10)
+    P.backfill(spark, control, provider, (FX.WATCH_CONTRACT,), chunk_size=10)
+    assert _warehouse_rows(lake) == _warehouse_rows(control)
+
+
 class _LossyProvider(FixtureBlockProvider):
     """Silently drops a set of heights from every fetch — the real-world
     shape of null/pruned replies and skipped transport errors that
@@ -850,9 +905,9 @@ def test_integrity_sweep_bounded_collect_fails_loud(spark, tmp_path):
 
 
 def test_receipts_hint_detected_by_signature_not_typeerror(spark, tmp_path):
-    """ADVICE r15: a TypeError raised INSIDE a modern receipts_for must
-    propagate, not silently select the legacy full-sweep path; a provider
-    without the tx_hashes hint still gets the legacy call."""
+    """ADVICE r15: a TypeError raised INSIDE receipts_for must propagate as
+    the bug it is, never be taken for a signature mismatch and retried
+    another way."""
     lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
     provider = FixtureBlockProvider(n_blocks=5, txs_per_block=2)
     raw = provider.fetch_blocks(spark, 0, 4)
@@ -862,17 +917,6 @@ def test_receipts_hint_detected_by_signature_not_typeerror(spark, tmp_path):
 
     with pytest.raises(TypeError, match="inside the callee"):
         P.ingest_raw(lake, raw, (FX.WATCH_CONTRACT,), buggy_modern)
-
-    calls = {"legacy": 0}
-
-    def legacy(raw_df):
-        calls["legacy"] += 1
-        return provider.receipts_for(raw_df)
-
-    lake2 = Lake(spark, str(tmp_path / "wh2"), bucket_size=10)
-    P.ingest_raw(lake2, provider.fetch_blocks(spark, 0, 4).localCheckpoint(eager=True),
-                 (FX.WATCH_CONTRACT,), legacy)
-    assert calls["legacy"] == 1
 
 
 def test_later_clean_chunk_never_papers_over_earlier_hole(spark, tmp_path):

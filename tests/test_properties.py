@@ -380,11 +380,11 @@ def test_forked_heights_matches_detect_reorgs(spark, cases):
 
 def test_lake_concurrent_mutations_lose_no_committed_rows(spark, tmp_path):
     """VERDICT r08 directive 5: the lake mutex discipline (lake.py — write
-    vs compact/_delete_where stage-and-swap) is correctness-critical and
-    was only single-threaded-tested. Hammer it: per seed, three writer
+    vs the compact/clean bucket rewrites' stage-and-swap) is
+    correctness-critical and was only single-threaded-tested. Hammer it: per seed, three writer
     threads append disjoint height ranges in randomized order with random
     jitter while a compactor loops compact() and a cleaner issues
-    clean_block_data() on heights committed before the threads started.
+    clean_blocks() on heights committed before the threads started.
     Invariant: the final table holds EXACTLY the appended rows minus the
     explicitly cleaned heights — a write landing between a maintenance
     op's scan and its swap would show up here as silently dropped rows.
@@ -439,7 +439,7 @@ def test_lake_concurrent_mutations_lose_no_committed_rows(spark, tmp_path):
         def cleaner():
             for h in cleaned:
                 time.sleep(rng.random() * 0.05)
-                lk.clean_block_data(h)
+                lk.clean_blocks([h])
 
         threads = [threading.Thread(target=run, args=(writer(pc),)) for pc in per_writer]
         threads += [
