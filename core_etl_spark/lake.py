@@ -25,10 +25,11 @@ This is the Spark-first replacement for the reference's storage backends
   so a bucket lying wholly inside a deleted height range loses its leaf
   dirs with no Spark job (the local-FS stand-in for a metastore
   ``ALTER TABLE DROP PARTITION``), and a bucket the range only overlaps is
-  rewritten from its own leaf dirs: filter, stage the survivors, swap them
-  in. Nothing outside the touched buckets is read or rewritten; a reorg at
-  the tip costs one bucket regardless of table size. The warehouse records
-  its bucket size on the first mutation, since every plan derives from it.
+  rewritten from its own leaf dirs, one task per leaf dir: filter, stage
+  the survivors, swap them in. Nothing outside the touched buckets is read
+  or rewritten; a reorg at the tip costs one bucket regardless of table
+  size. The warehouse records its bucket size on the first mutation, since
+  every plan derives from it, and refuses a size its buckets do not fit.
 - **Maturity** (K6): recomputed, never stored — ``matured`` is
   ``number <= tip - depth`` (reference mutates rows in place,
   sqlite3.rs:213-228; a computed view is both cheaper and can't go stale).
@@ -192,7 +193,9 @@ class Lake:
         """``bucket_size`` defaults to the size the warehouse recorded on
         its first mutation (``DEFAULT_BUCKET_SIZE`` for a warehouse nothing
         has mutated yet). A warehouse keeps one size: an explicit size that
-        disagrees with the recorded one raises ``ValueError``."""
+        disagrees with the recorded one raises ``ValueError``, and so does
+        a size the buckets of a warehouse with rows but no record do not
+        fit."""
         recorded = _recorded_bucket_size(root)
         self.spark = spark
         self.root = root
@@ -219,7 +222,8 @@ class Lake:
 
         Under the lock, this Lake's first mutation also records its bucket
         size at the warehouse root (tmp+rename), or raises ``ValueError``
-        when another Lake recorded a different one first."""
+        when another Lake recorded a different one first or the buckets
+        already there do not fit it (``_check_bucket_size``)."""
         from .operators.sketches import StoreLockedError, _store_lock
 
         key = os.path.abspath(self.root)
@@ -238,26 +242,39 @@ class Lake:
                     ) from e
                 _WRITER_LOCKS[key] = lk
             if not self._bucket_size_recorded:
-                self._record_bucket_size()
-
-    def _record_bucket_size(self) -> None:
-        recorded = _recorded_bucket_size(self.root)
-        if recorded is None:
-            path = _bucket_size_path(self.root)
-            tmp = f"{path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump({"bucket_size": int(self.bucket_size)}, f)
-            os.replace(tmp, path)
-            recorded = self.bucket_size
-        self._check_bucket_size(recorded)
+                recorded = _recorded_bucket_size(self.root)
+                self._check_bucket_size(recorded)
+                if recorded is None:
+                    path = _bucket_size_path(self.root)
+                    tmp = f"{path}.tmp.{os.getpid()}"
+                    with open(tmp, "w") as f:
+                        json.dump({"bucket_size": int(self.bucket_size)}, f)
+                    os.replace(tmp, path)
+                    self._bucket_size_recorded = True
 
     def _check_bucket_size(self, recorded: int | None) -> None:
-        if recorded is not None and recorded != self.bucket_size:
+        """Raise ``ValueError`` unless this Lake's size is the recorded one
+        or, with nothing recorded, maps the lowest and highest heights of
+        every table's top bucket to that bucket: deletes drop whole buckets
+        by this arithmetic alone."""
+        bs = self.bucket_size
+        if recorded is not None and recorded != bs:
             raise ValueError(
                 f"warehouse {self.root} recorded bucket size {recorded}, but "
-                f"this Lake uses {self.bucket_size}: every height lives in "
-                "the bucket the recorded size gives it"
+                f"this Lake uses {bs}: every height lives in the bucket the "
+                "recorded size gives it"
             )
+        for name in self.modules if recorded is None else ():
+            top = self._top_bucket(name)
+            if top is not None and top[2] is not None and not (
+                top[1] // bs == top[0] == top[2] // bs
+            ):
+                raise ValueError(
+                    f"warehouse {self.root} records no bucket size and its "
+                    f"{name} bucket {top[0]} holds heights {top[1]}..{top[2]}, "
+                    f"which bucket size {bs} puts elsewhere: open it with the "
+                    "bucket size it was written with"
+                )
         self._bucket_size_recorded = recorded is not None
 
     # --- layout --------------------------------------------------------------
@@ -395,7 +412,7 @@ class Lake:
         if not overlap:
             return out
         if height_range is not None:
-            maxes = [self._footer_stats(name, committed[b])[0] for b in overlap]
+            maxes = [self._footer_stats(name, committed[b])[1] for b in overlap]
             if all(m is not None and m < height_range[0] for m in maxes):
                 return out
         keys = list(_NATURAL_KEY[name])
@@ -661,30 +678,29 @@ class Lake:
 
     def _footer_stats(
         self, name: str, leaf_dirs: list[str]
-    ) -> tuple[int | None, int | None]:
-        """``(max height, rows)`` across leaf dirs from parquet footers —
-        pure driver-side metadata, no cluster job (every write sorts by
-        height within partitions, so row-group min/max stats are present
-        and tight). The max is None when some row group carries no min/max
-        statistics or the dirs hold no row; both are None when a dir or a
-        footer cannot be read (a torn file). Either way a caller that needs
-        the missing figure falls back to a scan or leaves the bucket alone."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-            return None, None
+    ) -> tuple[int | None, int | None, int | None]:
+        """``(min height, max height, rows)`` across leaf dirs from parquet
+        footers — pure driver-side metadata, no cluster job (every write
+        sorts by height within partitions, so row-group min/max stats are
+        present and tight). The min and max are None when some row group
+        carries no min/max statistics or the dirs hold no row; all three
+        are None when a dir or a footer cannot be read (a torn file).
+        Either way a caller that needs the missing figure falls back to a
+        scan or leaves the bucket alone."""
+        import pyarrow.parquet as pq
+
         col = _NUMBER_COL[name]
-        best, rows, stats = None, 0, True
+        lo, hi, rows, stats = None, None, 0, True
         for dirpath in leaf_dirs:
             try:
                 files = _parquet_files(dirpath)
             except OSError:
-                return None, None
+                return None, None, None
             for path in files:
                 try:
                     md = pq.read_metadata(path)
                 except Exception:  # noqa: BLE001 — torn file → scan fallback
-                    return None, None
+                    return None, None, None
                 rows += md.num_rows
                 idx = next(
                     (i for i in range(md.num_columns)
@@ -697,8 +713,25 @@ class Lake:
                     if st is None or not st.has_min_max:
                         stats = False
                         break
-                    best = st.max if best is None else max(best, st.max)
-        return (int(best) if stats and best is not None else None), rows
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+        if not stats or hi is None:
+            return None, None, rows
+        return int(lo), int(hi), rows
+
+    def _top_bucket(self, name: str) -> tuple[int, int | None, int | None] | None:
+        """``(index, min height, max height)`` of ``name``'s highest
+        committed bucket, or None when it has none: from that bucket's
+        footers, else from a scan of its leaf dirs alone."""
+        leaves = self._bucket_leaf_dirs(name)
+        if not leaves:
+            return None
+        top = max(leaves)
+        lo, hi, _ = self._footer_stats(name, leaves[top])
+        if hi is None:
+            num = F.col(_NUMBER_COL[name])
+            lo, hi = self._scan(name, leaves[top]).agg(F.min(num), F.max(num)).first()
+        return top, lo, hi
 
     def latest_block_number(self) -> int:
         """Resume point (reference etl.rs:84-89): max height with the Q1
@@ -715,20 +748,10 @@ class Lake:
         role falls to the table format's column stats — e.g. Delta/Iceberg
         manifest entries — rather than raw footer reads.)"""
         for name in (BLOCKS, TRANSACTIONS, TOKEN_TRANSFERS):
-            if name in self.modules and self.exists(name):
-                leaves = self._bucket_leaf_dirs(name)
-                top = max(leaves) if leaves else None
-                if top is not None:
-                    m, _ = self._footer_stats(name, leaves[top])
-                    if m is not None:
-                        return m
-                # read ONLY the top bucket's leaf dirs — skips the
-                # full-table file listing, not just the file scan
-                # (block_bucket is the leaf level in every layout)
-                df = self._scan(name, leaves[top] if leaves else None)
-                row = df.agg(F.max(_NUMBER_COL[name]).alias("m")).first()
-                if row and row.m is not None:
-                    return int(row.m)
+            if name in self.modules:
+                top = self._top_bucket(name)
+                if top is not None and top[2] is not None:
+                    return int(top[2])
         return -1
 
     # --- maturity (K6) -----------------------------------------------------------
@@ -789,29 +812,26 @@ class Lake:
         target_rows_per_file: int,
     ) -> None:
         """Rewrite ``buckets`` of ``name`` from their own leaf dirs, keeping
-        the rows ``keep`` admits (every row when None), into
-        ``⌈rows/target⌉`` files, with ``rows`` from the footers. The rows
-        are range-partitioned on (layout columns, height), so an oversized
-        bucket spreads across several tasks instead of one writer, sorted
-        within each task by the same key, so every file stays ordered by
-        height with tight min/max statistics (``_drop_redelivered``'s
-        footer rule), and capped at ``maxRecordsPerFile`` even when one task
-        holds more than a file's worth. The survivors are staged, then
-        swapped in leaf dir by leaf dir; a bucket the stage holds nothing
-        of is dropped (the local-FS stand-in for ``ALTER TABLE DROP
-        PARTITION``). Callers hold the writer lock and the mutex."""
+        the rows ``keep`` admits (every row when None). Hash partitioning on
+        the layout columns hands each leaf dir whole to one task; sorting
+        by (layout columns, height) keeps every file ordered by height with
+        tight min/max statistics (``_drop_redelivered``'s footer rule); and
+        ``maxRecordsPerFile`` gives each leaf dir exactly
+        ``max(1, ⌈rows/target⌉)`` files, which ``compact`` finds settled.
+        The survivors are staged, then swapped in leaf dir by leaf dir; a
+        bucket the stage holds nothing of is dropped (the local-FS stand-in
+        for ``ALTER TABLE DROP PARTITION``). Callers hold the writer lock
+        and the mutex."""
         committed = self._bucket_leaf_dirs(name)
         dirs = [d for b in buckets for d in committed.get(b, [])]
-        _, rows = self._footer_stats(name, dirs)
-        n_files = max(1, -(-(rows or 0) // target_rows_per_file))
         df = self._scan(name, dirs)
         if keep is not None:
             df = df.filter(keep)
-        key = [F.col(c) for c in _PARTITION_COLS[name]] + [F.col(_NUMBER_COL[name])]
+        layout = [F.col(c) for c in _PARTITION_COLS[name]]
         stage = os.path.join(self.root, f".stage_{name}_{os.urandom(6).hex()}")
         (
-            df.repartitionByRange(n_files, *key)
-            .sortWithinPartitions(*key)
+            df.repartition(*layout)
+            .sortWithinPartitions(*layout, F.col(_NUMBER_COL[name]))
             .write.mode("overwrite")
             .option("maxRecordsPerFile", target_rows_per_file)
             .partitionBy(*_PARTITION_COLS[name])
@@ -922,7 +942,7 @@ class Lake:
                     n_files = len(_parquet_files(d))
                     if n_files < 2:
                         continue
-                    _, rows = self._footer_stats(name, [d])
+                    _, _, rows = self._footer_stats(name, [d])
                     if rows is not None and n_files > max(1, -(-rows // target_rows_per_file)):
                         todo.append(b)
                         break

@@ -214,7 +214,7 @@ def test_clean_blocks(lake):
 
     for name, col in (("blocks", "number"), ("transactions", "block_number")):
         dirs = lake._bucket_leaf_dirs(name)[1]
-        assert lake._footer_stats(name, dirs)[0] == 19, name
+        assert lake._footer_stats(name, dirs)[:2] == (10, 19), name
         for d in dirs:
             for f in os.listdir(d):
                 if f.endswith(".parquet"):
@@ -314,6 +314,71 @@ def test_warehouse_keeps_one_bucket_size(spark, tmp_path):
     with pytest.raises(ValueError, match="bucket size"):
         fresh.truncate_from_last_saved(1)
     assert reopened.blocks().count() == 20
+
+
+def test_unrecorded_warehouse_refuses_a_size_its_buckets_do_not_fit(spark, tmp_path):
+    """A warehouse written before sizes were recorded has buckets but no
+    record. Deletes drop whole buckets by ``b * bucket_size`` arithmetic,
+    so a size the buckets do not fit must be refused before it is
+    recorded: at construction, and at the first mutation of a lake opened
+    while the warehouse was still empty. Otherwise a truncate of 3 under
+    size 100,000 sees tip 29 and drops buckets 1 and 2 whole, heights
+    10..29, where only 27..29 were meant."""
+    root = str(tmp_path / "legacy")
+    early = Lake(spark, root)  # opened empty: default size, nothing recorded
+    _fill(spark, Lake(spark, root, bucket_size=BUCKET), 30)
+    os.remove(os.path.join(root, "_bucket_size"))  # as written before records
+    with pytest.raises(ValueError, match="bucket size"):
+        Lake(spark, root)
+    with pytest.raises(ValueError, match="bucket size"):
+        Lake(spark, root, bucket_size=100)  # larger: top bucket 2 holds 20..29
+    with pytest.raises(ValueError, match="bucket size"):
+        Lake(spark, root, bucket_size=3)  # smaller: 29 // 3 is not 2
+    with pytest.raises(ValueError, match="bucket size"):
+        early.truncate_from_last_saved(3)
+    assert not os.path.exists(os.path.join(root, "_bucket_size"))
+    for name in ALL_MODULES:
+        assert sorted(early._bucket_leaf_dirs(name)) == [0, 1, 2], name
+    # the size it was written with is accepted and recorded
+    right = Lake(spark, root, bucket_size=BUCKET)
+    right.truncate_from_last_saved(3)
+    assert right.blocks().count() == 27
+    assert Lake(spark, root).bucket_size == BUCKET
+
+
+def test_compaction_settles_in_one_pass(spark, tmp_path):
+    """A rewrite writes each leaf dir whole in one task, so every leaf dir
+    ends with exactly ``max(1, ⌈rows/target⌉)`` files and a second
+    ``compact`` finds nothing to do. Three buckets of 20 blocks at a target
+    of 30 need one file each; the transfers leaf dirs of the same buckets
+    hold about 40 rows each and need two or more."""
+    import glob
+
+    lk = Lake(spark, str(tmp_path / "settle"), bucket_size=20)
+    raw = FX.raw_blocks(spark, n_blocks=60, txs_per_block=4)
+    for lo in range(0, 60, 5):  # 12 micro-batches, 4 per bucket
+        batch = raw.filter(F.col("number").between(lo, lo + 4))
+        txs = T.normalize_transactions(batch)
+        blocks = T.normalize_blocks(batch)
+        transfers = T.propagate_created_at(
+            D.extract_token_transfers(txs, FX.WATCH_CONTRACT, FX.receipts(batch)),
+            txs, blocks,
+        )
+        lk.write("blocks", blocks)
+        lk.write(TOKEN_TRANSFERS, transfers)
+    n_transfers = lk.token_transfers().count()
+    assert lk.compact("blocks", target_rows_per_file=30) == 3
+    assert lk.compact(TOKEN_TRANSFERS, target_rows_per_file=30) == 3
+    for name, want in (("blocks", lambda rows: 1),
+                       (TOKEN_TRANSFERS, lambda rows: -(-rows // 30))):
+        for b, dirs in lk._bucket_leaf_dirs(name).items():
+            for d in dirs:
+                rows = lk._footer_stats(name, [d])[2]
+                assert name == "blocks" or rows > 30, (b, rows)
+                assert len(glob.glob(f"{d}/*.parquet")) == want(rows), (name, b)
+        assert lk.compact(name, target_rows_per_file=30) == 0, name
+    assert lk.blocks().select("number").distinct().count() == 60
+    assert lk.token_transfers().count() == n_transfers
 
 
 def test_detect_reorgs(lake, spark):
