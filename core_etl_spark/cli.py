@@ -35,7 +35,7 @@ from .pipeline import (
     start_retention_scheduler,
 )
 from .session import get_spark
-from .sources.provider import FixtureBlockProvider
+from .sources.provider import FixtureBlockProvider, RpcBlockProvider
 
 
 def _show(df: DataFrame, n: int = 50) -> None:
@@ -82,18 +82,16 @@ def cmd_export(args: argparse.Namespace) -> int:
     if args.tail:
         from .streaming.tail import start_tail
 
-        # Live provider → the poller bridges the WS new-heads subscription
+        # Live provider → the poller bridges the new-heads subscription
         # into the tail's drop directory (reference etl.rs:126-176 runs
         # subscription→fetch→ETL in one loop; see streaming/poller.py for
         # why the handoff goes through files). Fixture/offline runs leave
         # the drop dir externally fed and drain it available-now.
         poller = None
-        transport = getattr(provider, "transport", None)
-        if transport is not None and hasattr(transport, "subscribe_blocks"):
+        if isinstance(provider, RpcBlockProvider):
             from .streaming.poller import HeadPoller
 
-            poller = HeadPoller(spark, transport, args.tail,
-                                batch_size=args.poll_batch_size).start()
+            poller = HeadPoller(spark, provider, lake, args.tail).start()
         q = start_tail(spark, lake, args.tail, args.checkpoint, contracts,
                        getattr(provider, "receipts_for", None),
                        trigger_interval="10 seconds" if poller else None)
@@ -542,8 +540,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "ignored with --fixture")
     e.add_argument("--url", default="",
                    help="explicit ws:// RPC endpoint (overrides --network)")
-    e.add_argument("--poll-batch-size", type=int, default=1,
-                   help="heads per raw-block drop while tailing live")
     e.add_argument("--watch-tokens", default="",
                    help="comma list of type:address (reference -t flag)")
     e.add_argument("--modules", default="",

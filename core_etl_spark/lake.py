@@ -148,15 +148,28 @@ def _bucket_size_path(root: str) -> str:
     return os.path.join(root, "_bucket_size")
 
 
-def _recorded_bucket_size(root: str) -> int | None:
-    """The bucket size the warehouse recorded on its first mutation, or
-    None when nothing has mutated it yet. A record that does not parse
-    raises: guessing a size would send reads to the wrong buckets."""
+def _read_record(path: str, key: str) -> int | None:
+    """The integer under ``key`` in a one-key JSON warehouse record (the
+    bucket size, the ingest commit marker), or None when the file does not
+    exist. Any other failure raises and names the file: a guessed bucket
+    size sends reads to the wrong buckets, and a guessed commit point
+    resumes past the torn range the marker holds back."""
     try:
-        with open(_bucket_size_path(root)) as f:
-            return int(json.load(f)["bucket_size"])
+        with open(path) as f:
+            return int(json.load(f)[key])
     except FileNotFoundError:
         return None
+    except (OSError, ValueError, KeyError, TypeError) as e:
+        raise ValueError(f"unreadable warehouse record {path}: {e!r}") from e
+
+
+def _write_record(path: str, key: str, value: int) -> None:
+    """Replace a one-key JSON warehouse record atomically (tmp+rename), so
+    a reader sees the old value or the new one, never a torn file."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump({key: int(value)}, f)
+    os.replace(tmp, path)
 
 
 def _contiguous_ranges(heights: Iterable[int]) -> list[tuple[int, int]]:
@@ -196,7 +209,7 @@ class Lake:
         disagrees with the recorded one raises ``ValueError``, and so does
         a size the buckets of a warehouse with rows but no record do not
         fit."""
-        recorded = _recorded_bucket_size(root)
+        recorded = _read_record(_bucket_size_path(root), "bucket_size")
         self.spark = spark
         self.root = root
         self.bucket_size = bucket_size or recorded or DEFAULT_BUCKET_SIZE
@@ -242,14 +255,11 @@ class Lake:
                     ) from e
                 _WRITER_LOCKS[key] = lk
             if not self._bucket_size_recorded:
-                recorded = _recorded_bucket_size(self.root)
+                path = _bucket_size_path(self.root)
+                recorded = _read_record(path, "bucket_size")
                 self._check_bucket_size(recorded)
                 if recorded is None:
-                    path = _bucket_size_path(self.root)
-                    tmp = f"{path}.tmp.{os.getpid()}"
-                    with open(tmp, "w") as f:
-                        json.dump({"bucket_size": int(self.bucket_size)}, f)
-                    os.replace(tmp, path)
+                    _write_record(path, "bucket_size", self.bucket_size)
                     self._bucket_size_recorded = True
 
     def _check_bucket_size(self, recorded: int | None) -> None:
@@ -522,22 +532,11 @@ class Lake:
         return os.path.join(self.root, "_ingest_commit")
 
     def _read_marker(self) -> int | None:
-        import json as _json
-
-        try:
-            with open(self._marker_path()) as f:
-                return int(_json.load(f)["hi"])
-        except (OSError, ValueError, KeyError, TypeError):
-            return None
+        return _read_record(self._marker_path(), "hi")
 
     def _write_marker(self, hi: int) -> None:
-        import json as _json
-
         os.makedirs(self.root, exist_ok=True)
-        tmp = f"{self._marker_path()}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            _json.dump({"hi": int(hi)}, f)
-        os.replace(tmp, self._marker_path())
+        _write_record(self._marker_path(), "hi", hi)
 
     def _advance_commit_marker(self, hi: int, lo: int) -> None:
         """Advance the watermark to ``hi`` — but never ACROSS a gap: the
@@ -561,7 +560,9 @@ class Lake:
         modules: the group-commit marker when present, else the legacy
         blocks-tip fallback chain. This — not ``latest_block_number`` — is
         what O3 resume and the tail's stale guard must key on, or a torn
-        ``write_all`` strands per-sink holes forever (r15 review)."""
+        ``write_all`` strands per-sink holes forever (r15 review). A marker
+        that cannot be read raises instead of falling back past the range
+        it holds back."""
         m = self._read_marker()
         return m if m is not None else self.latest_block_number()
 

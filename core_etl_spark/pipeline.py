@@ -301,8 +301,12 @@ def repair_unverifiable_blocks(
     # The probe is partition-pruned to the flagged heights' buckets and
     # LIMIT 1.
     if not watch_contracts:
-        tt = lake.token_transfers()
-        if tt.filter(F.col("block_number").isin(flagged)).limit(1).count():
+        buckets = sorted({n // lake.bucket_size for n in flagged})
+        probe = lake.token_transfers().filter(
+            F.col("block_bucket").isin(buckets)
+            & F.col("block_number").isin(flagged)
+        )
+        if probe.limit(1).count():
             raise ValueError(
                 "repair_unverifiable_blocks: flagged heights carry "
                 "token_transfers rows but watch_contracts is empty — the "

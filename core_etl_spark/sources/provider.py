@@ -21,6 +21,7 @@ network use in tests is loud; wire a live one with ``ws.make_provider()``.
 from __future__ import annotations
 
 import json
+import logging
 import math
 from typing import Callable, Iterator
 
@@ -28,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.tail import RAW_BLOCK_DDL
 from . import fixtures
+
+log = logging.getLogger(__name__)
 
 #: transport: (method, params_json) -> result_json — one JSON-RPC exchange
 Transport = Callable[[str, str], str]
@@ -200,17 +203,27 @@ class RpcBlockProvider:
 
     def chain_tip(self) -> int:
         res = json.loads(self.transport("xcb_blockNumber", "[]"))
-        # parse-or-raise CLEANLY: int(None) was a bare TypeError from deep
-        # inside the O5 retry loop (r15 review); a wrong tip is dangerous,
-        # so garbage gets a loud error, not a default
-        if isinstance(res, str):
-            try:
-                return int(res, 16) if res.startswith("0x") else int(res)
-            except ValueError:
-                raise ValueError(f"xcb_blockNumber returned non-quantity {res!r}")
-        if isinstance(res, int) and not isinstance(res, bool):
-            return res
-        raise ValueError(f"xcb_blockNumber returned non-quantity {res!r}")
+        # a wrong tip is dangerous, so a non-quantity raises instead of
+        # taking _quantity's default
+        tip = _quantity(res, -1)
+        if tip < 0 or isinstance(res, bool):
+            raise ValueError(f"xcb_blockNumber returned non-quantity {res!r}")
+        return tip
+
+    def announced_heights(self, stop=None) -> Iterator[int]:
+        """S2 — the heights the node announces on its new-heads
+        subscription (provider.rs:45-47), parsed like every other wire
+        quantity. A head with no parseable height (not an object, no
+        ``number``, a non-quantity) is skipped with a log line: the
+        subscription is long-lived, and one garbled push must not end it
+        for every head after it. ``stop`` is passed to the transport's
+        ``subscribe_blocks``, which checks it at least every recv timeout."""
+        for head in self.transport.subscribe_blocks(stop=stop):
+            number = _quantity(head.get("number"), -1) if isinstance(head, dict) else -1
+            if number < 0:
+                log.warning("head poller: skipping malformed head %r", head)
+                continue
+            yield number
 
     def network_id(self) -> int:
         return int(json.loads(self.transport("net_version", "[]")))

@@ -289,7 +289,6 @@ class WsJsonRpcTransport:
         retries: int = 5,
         retry_delay: float = 5.0,
         timeout: float = 30.0,
-        namespace: str = "xcb",
     ) -> None:
         if url is None:
             if network is None:
@@ -299,7 +298,6 @@ class WsJsonRpcTransport:
         self.retries = retries
         self.retry_delay = retry_delay
         self.timeout = timeout
-        self.namespace = namespace
         self._ws: _WsSocket | None = None
         self._lock = threading.Lock()
         self._rx_lock = threading.Lock()
@@ -432,9 +430,10 @@ class WsJsonRpcTransport:
 
     def subscribe_blocks(self, stop=None) -> Iterator[dict]:
         """S2 — the new-heads subscription (provider.rs:45-47): subscribe
-        via ``<ns>_subscribe(["newHeads"])`` and yield each header payload
-        as it arrives. Blocking generator; drive it from the poller that
-        lands raw-block files for the streaming tail
+        via ``xcb_subscribe(["newHeads"])`` and yield each header payload
+        as it arrives. Blocking generator; the headers are raw wire
+        objects, which ``RpcBlockProvider.announced_heights`` parses into
+        heights for the head poller
         (:class:`~core_etl_spark.streaming.poller.HeadPoller`).
 
         Survives both quiet chains (each 30 s recv timeout just polls
@@ -447,7 +446,7 @@ class WsJsonRpcTransport:
         heads could not be joined until the next block arrived (r15
         review — the poller docstring's "join is bounded by the socket
         timeout" was only true on an active chain)."""
-        sub_id = json.loads(self(f"{self.namespace}_subscribe", '["newHeads"]'))
+        sub_id = json.loads(self("xcb_subscribe", '["newHeads"]'))
 
         def heads() -> Iterator[dict]:
             nonlocal sub_id
@@ -469,9 +468,7 @@ class WsJsonRpcTransport:
                     continue  # idle between heads — keep listening
                 except (WsError, OSError):
                     self._mark_dead()
-                    sub_id = json.loads(
-                        self(f"{self.namespace}_subscribe", '["newHeads"]')
-                    )
+                    sub_id = json.loads(self("xcb_subscribe", '["newHeads"]'))
 
         return heads()
 

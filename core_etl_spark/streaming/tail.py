@@ -131,7 +131,7 @@ def make_tail_batch_processor(
         # etl.rs:147-169). Everything stored at or above the fork point was
         # built on the dead branch — truncate it, then the replacement rows
         # (and any heights the batch re-delivers) flow through the normal
-        # write below; heights the batch doesn't carry re-sync via backfill.
+        # write below; heights the batch does not carry come in the next drop.
         stored = lake.block_hashes_at(
             {h for n in picked for h in (n, n - 1)}
         )
@@ -156,9 +156,10 @@ def make_tail_batch_processor(
         # fork just truncated the previous tip, or the subscription dropped
         # blocks — would advance the watermark beyond a PERMANENT hole that
         # resume can never see again. Skipped heights are not lost: the
-        # watermark stays at the gap, so the alternating backfill
-        # (run_with_retry's loop, or the next catch-up pass) re-fetches
-        # from exactly there.
+        # watermark stays at the gap, and every later head poller drop
+        # starts at the watermark (streaming/poller.py), so the next drop
+        # re-delivers from exactly there. A drop directory fed by other
+        # means must start its drops there too.
         last = lake.resume_point()
         n_fresh = 0
         while last + n_fresh + 1 in picked:

@@ -15,9 +15,10 @@ Found and fixed in r13 (each pinned below):
 - a lying frame-length field drove an unbounded recv/allocation — now
   bounded (64 MiB/frame, 256 MiB/message, 1 MiB handshake) → WsError;
 - one malformed head push (non-dict head, non-hex number, non-object
-  block reply) raised inside ``HeadPoller._fetch_full`` and killed the
-  daemon for every block after it — now skipped with a warning (the
-  tail re-syncs skipped heights from the next good head).
+  block reply) raised inside the head poller and killed the daemon for
+  every block after it — now a malformed head is skipped with a warning
+  and a bad block reply is skipped per height (the next drop, which
+  starts at the commit point, re-fetches it).
 
 Probed and found ALREADY SAFE (pinned below so regressions surface):
 null keys in the applyInPandasWithState bodies (they form a key=None
@@ -183,7 +184,8 @@ def test_subscription_skips_malformed_pushes_and_recovers():
 
 class _StubTransport:
     """subscribe_blocks() yields a scripted head sequence; __call__
-    returns a canned block for any getBlockByNumber."""
+    answers getBlockByNumber with a wire-shaped block unless ``replies``
+    scripts that height."""
 
     def __init__(self, heads, replies=None):
         self._heads = heads
@@ -193,24 +195,24 @@ class _StubTransport:
         return iter(self._heads)
 
     def __call__(self, method, params_json):
+        from tests.test_ws import _block
+
         number = int(json.loads(params_json)[0], 16)
-        if number in self._replies:
-            return json.dumps(self._replies[number])
-        return json.dumps(
-            {
-                "number": number, "hash": f"h{number}",
-                "parent_hash": f"h{number - 1}",
-                "nonce": "00", "sha3_uncles": "u", "logs_bloom": "b",
-                "transactions_root": "t", "state_root": "s",
-                "receipts_root": "r", "miner": "m", "difficulty": "1",
-                "total_difficulty": "1", "extra_data": "00",
-                "energy_limit": 1, "energy_used": 0,
-                "timestamp": 1_700_000_000, "transactions": [],
-            }
-        )
+        return json.dumps(self._replies.get(number, _block(number)))
+
+
+class _CommittedThrough:
+    """The one thing the poller reads from a lake: its commit point."""
+
+    def __init__(self, height: int) -> None:
+        self.height = height
+
+    def resume_point(self) -> int:
+        return self.height
 
 
 def test_poller_skips_malformed_heads_and_keeps_going(spark, tmp_path):
+    from core_etl_spark.sources.provider import RpcBlockProvider
     from core_etl_spark.streaming.poller import HeadPoller
 
     out = str(tmp_path / "drops")
@@ -219,22 +221,25 @@ def test_poller_skips_malformed_heads_and_keeps_going(spark, tmp_path):
         {"no_number": True},                # missing number
         {"number": "zz"},                   # non-hex quantity string
         {"number": None},                   # explicit null
-        {"number": 10},                     # good — fetched and dropped
-        {"number": 11},                     # good — reply is null (skipped)
-        {"number": 12},                     # good — reply is a list (skipped)
-        {"number": 13},                     # good — fetched and dropped
+        {"number": "0xa"},                  # good — drop 10..10
+        {"number": "0xb"},                  # good — 11's reply is null
+        {"number": 12},                     # good — 12's reply is a list
+        {"number": "13"},                   # good — drop 10..13
     ]
+    provider = RpcBlockProvider(
+        _StubTransport(heads, replies={11: None, 12: [1, 2]})
+    )
     poller = HeadPoller(
-        spark,
-        _StubTransport(heads, replies={11: None, 12: [1, 2]}),
-        out,
-        max_blocks=2,
+        spark, provider, _CommittedThrough(9), out, max_blocks=4
     ).start()
     poller.join(60)
     assert not poller.alive, "poller hung instead of finishing"
-    assert poller.blocks_written == 2
-    nums = {r.number for r in spark.read.parquet(out).select("number").collect()}
-    assert nums == {10, 13}
+    assert poller.error is None, poller.error
+    assert poller.heads_dropped == 4
+    drops = spark.read.parquet(out)
+    assert len(drops.inputFiles()) == 4  # one file per head
+    nums = {r.number for r in drops.select("number").collect()}
+    assert nums == {10, 13}  # every drop starts at the commit point
 
 
 # --- tail batch processor: null header fields -------------------------------

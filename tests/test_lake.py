@@ -346,6 +346,24 @@ def test_unrecorded_warehouse_refuses_a_size_its_buckets_do_not_fit(spark, tmp_p
     assert Lake(spark, root).bucket_size == BUCKET
 
 
+def test_unreadable_commit_marker_refuses_resume(spark, tmp_path):
+    """The commit marker holds resume below a torn range. A marker that
+    does not parse must raise and name the file, not fall back to the
+    blocks tip past that range; a missing marker still falls back."""
+    root = str(tmp_path / "wh")
+    lk = _fill(spark, Lake(spark, root, bucket_size=BUCKET), 30)
+    marker = os.path.join(root, "_ingest_commit")
+    with open(marker, "w") as f:
+        f.write('{"hi": 12}')  # heights above 12 are a torn range
+    assert lk.resume_point() == 12
+    with open(marker, "w") as f:
+        f.write('{"hi": 1')  # torn by hand; the writer renames whole files
+    with pytest.raises(ValueError, match="_ingest_commit"):
+        lk.resume_point()
+    os.remove(marker)
+    assert lk.resume_point() == 29  # no marker: the blocks tip
+
+
 def test_compaction_settles_in_one_pass(spark, tmp_path):
     """A rewrite writes each leaf dir whole in one task, so every leaf dir
     ends with exactly ``max(1, ⌈rows/target⌉)`` files and a second

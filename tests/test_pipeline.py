@@ -896,6 +896,43 @@ def test_integrity_sweep_repairs_null_hash_blocks(spark, tmp_path, flagged):
                                         (FX.WATCH_CONTRACT,)) == 0
 
 
+def test_integrity_sweep_refuses_to_drop_unwatched_transfers(
+    spark, tmp_path, monkeypatch
+):
+    """A repair with no watch list would delete the flagged heights'
+    transfers and re-create none. It must refuse before touching a row,
+    and its probe for those transfers must read only the flagged heights'
+    buckets (the bucket predicate reaches ``PartitionFilters``)."""
+    import re
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
+    dirty = _NullHashProvider({23}, n_blocks=40, txs_per_block=2)
+    P.backfill(spark, lake, dirty, (FX.WATCH_CONTRACT,), chunk_size=10)
+    assert lake.token_transfers().filter(F.col("block_number") == 23).count()
+    before = _warehouse_rows(lake)
+
+    frame_type = type(lake.blocks())
+    limited = []
+    real_limit = frame_type.limit
+
+    def spy_limit(self, n):
+        limited.append(self)
+        return real_limit(self, n)
+
+    monkeypatch.setattr(frame_type, "limit", spy_limit)
+    healed = FixtureBlockProvider(n_blocks=40, txs_per_block=2)
+    with pytest.raises(ValueError, match="watch_contracts is empty"):
+        P.repair_unverifiable_blocks(spark, lake, healed)
+    monkeypatch.undo()
+    assert _warehouse_rows(lake) == before
+
+    plans = [df._jdf.queryExecution().executedPlan().toString() for df in limited]
+    probe = [p for p in plans if "transfer_index" in p]
+    assert len(probe) == 1, plans
+    partition_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", probe[0])
+    assert any("block_bucket" in f for f in partition_filters), probe[0]
+
+
 def test_integrity_sweep_bounded_collect_fails_loud(spark, tmp_path):
     lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
     dirty = _NullHashProvider(set(range(12)), n_blocks=12, txs_per_block=1)

@@ -17,6 +17,27 @@ from tests.test_ws import HANDLERS, _block
 from tests.ws_server import MockWsRpcServer
 
 
+def _poll_then_tail(
+    spark, tmp_path, srv, provider, lake, heads, watch: tuple[str, ...] = ()
+) -> None:
+    """Run a poller over ``heads`` pushed in order, then drain its drops
+    with an available-now tail that decodes ``watch``'s transfers."""
+    src = str(tmp_path / "drops")
+    poller = HeadPoller(spark, provider, lake, src, max_blocks=len(heads)).start()
+    deadline = time.time() + 10
+    while not srv._sub_ids and time.time() < deadline:
+        time.sleep(0.02)  # poller subscribing
+    assert srv._sub_ids, "poller never subscribed"
+    for h in heads:
+        srv.push_head(h)
+    poller.join(60)
+    assert not poller.alive and poller.error is None, poller.error
+    assert poller.heads_dropped == len(heads)
+    q = start_tail(spark, lake, src, str(tmp_path / "ck"), watch,
+                   provider.receipts_for)
+    q.awaitTermination(120)
+
+
 def test_live_export_backfill_then_tail(spark, tmp_path):
     """The reference's full export run (export.rs:46-71 → etl.rs:126-176):
     chunked backfill over RPC, then the subscription-fed tail extends the
@@ -31,43 +52,56 @@ def test_live_export_backfill_then_tail(spark, tmp_path):
         assert lake.latest_block_number() == 4
         assert lake.transactions().count() == 10  # 2 txs per fixture block
 
-        src = str(tmp_path / "drops")
-        poller = HeadPoller(spark, t, src, max_blocks=2).start()
-        deadline = time.time() + 10
-        while not srv._sub_ids and time.time() < deadline:
-            time.sleep(0.02)  # poller subscribing
-        assert srv._sub_ids, "poller never subscribed"
-
-        srv.push_head(_block(5))
-        srv.push_head(_block(6))
-        poller.join(30)
-        assert not poller.alive
-        assert poller.blocks_written == 2
-
-        q = start_tail(spark, lake, src, str(tmp_path / "ck"))
-        q.awaitTermination(120)
+        _poll_then_tail(spark, tmp_path, srv, provider, lake, [_block(5), _block(6)])
         assert lake.latest_block_number() == 6
         assert lake.blocks().count() == 7
         assert lake.transactions().count() == 14
         t.close()
 
 
-def test_poller_batches_heads(spark, tmp_path):
-    """batch_size coalesces consecutive heads into one drop file."""
+def test_live_tail_fills_the_gap_before_the_first_head(spark, tmp_path):
+    """The first head the subscription announces lies past the backfill's
+    tip (the chain moved on while the backfill ran). Each drop starts at
+    the commit point, so the tail reaches the last head instead of waiting
+    at the gap forever."""
     with MockWsRpcServer(HANDLERS) as srv:
         t = WsJsonRpcTransport(url=srv.url, retries=1, retry_delay=0.1)
-        src = str(tmp_path / "drops")
-        poller = HeadPoller(spark, t, src, batch_size=3, max_blocks=3).start()
-        deadline = time.time() + 10
-        while not srv._sub_ids and time.time() < deadline:
-            time.sleep(0.02)
-        for n in (10, 11, 12):
-            srv.push_head(_block(n))
-        poller.join(30)
-        assert poller.blocks_written == 3
-        df = spark.read.parquet(src)
-        assert sorted(r.number for r in df.select("number").collect()) == [10, 11, 12]
-        # one coalesced drop → a single parquet data file
-        n_files = df.select(df.number).inputFiles()
-        assert len(n_files) == 1
+        provider = RpcBlockProvider(transport=t, chunk_size=5)
+        lake = Lake(spark, str(tmp_path / "wh"), bucket_size=25)
+        backfill(spark, lake, provider, end=4, chunk_size=5)
+        assert lake.resume_point() == 4
+
+        _poll_then_tail(spark, tmp_path, srv, provider, lake,
+                        [_block(7), _block(8), _block(9)])
+        assert lake.resume_point() == 9
+        assert lake.blocks().count() == 10
+        assert lake.transactions().count() == 20
+        t.close()
+
+
+def test_live_tail_refetches_a_height_whose_fetch_failed(spark, tmp_path):
+    """The node rejects the first request for height 6. The drop for head
+    7 lacks it, so the tail admits only 5; the drop for head 8 starts at
+    the commit point again and carries 6."""
+    rejected: list[int] = []
+
+    def get_block(params):
+        n = int(params[0], 16)
+        if n == 6 and not rejected:
+            rejected.append(n)
+            raise RuntimeError("header not found")
+        return _block(n, txs=2)
+
+    handlers = dict(HANDLERS, xcb_getBlockByNumber=get_block)
+    with MockWsRpcServer(handlers) as srv:
+        t = WsJsonRpcTransport(url=srv.url, retries=1, retry_delay=0.1)
+        provider = RpcBlockProvider(transport=t, chunk_size=5)
+        lake = Lake(spark, str(tmp_path / "wh"), bucket_size=25)
+        backfill(spark, lake, provider, end=4, chunk_size=5)
+
+        _poll_then_tail(spark, tmp_path, srv, provider, lake,
+                        [_block(7), _block(8), _block(9)])
+        assert rejected == [6]
+        assert lake.resume_point() == 9
+        assert lake.blocks().count() == 10
         t.close()

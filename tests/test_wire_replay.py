@@ -17,6 +17,9 @@ from pyspark.sql import functions as F
 from core_etl_spark import pipeline as P
 from core_etl_spark.lake import Lake
 from core_etl_spark.sources.provider import RpcBlockProvider
+from core_etl_spark.sources.ws import WsJsonRpcTransport
+from tests.test_poller import _poll_then_tail
+from tests.ws_server import MockWsRpcServer
 
 _FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "mainnet_frames.json")
 
@@ -59,23 +62,13 @@ def _w64(v: int) -> str:
     return format(v, "064x")
 
 
-def test_recorded_mainnet_frames_to_oracle_green_warehouse(spark, tmp_path):
-    fx = _load()
-    actors = fx["actors"]
+def _assert_recorded_rows(lake: Lake, actors: dict) -> dict[str, dict]:
+    """The warehouse rows the recorded chain (heights 0..3) must land as,
+    whichever path ingested it. Returns the transactions by hash."""
     watch, alice, bob, carol, dave = (
         actors["watch"], actors["alice"], actors["bob"], actors["carol"],
         actors["dave"],
     )
-    transport = ReplayTransport(fx, log_path=str(tmp_path / "rpc.log"))
-    provider = RpcBlockProvider(transport, chunk_size=2)
-
-    assert provider.chain_tip() == 3
-    assert provider.network_id() == 1
-    assert provider.syncing() is False
-
-    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
-    n = P.backfill(spark, lake, provider, (watch,), chunk_size=4)
-    assert n == 4
     assert lake.resume_point() == 3  # contiguous — marker reaches the tip
 
     # --- blocks: camelCase/hex wire → snake_case/int/decimal-string rows ---
@@ -93,7 +86,6 @@ def test_recorded_mainnet_frames_to_oracle_green_warehouse(spark, tmp_path):
     # --- transactions ---
     txs = lake.transactions().collect()
     assert len(txs) == 6
-    by_hash = {r["hash"]: r for r in txs}
     plain = [r for r in txs if r["block_number"] == 0][0]
     assert plain["value"] == str(10**16)                 # hex u256 → decimal str
     assert plain["energy"] == "21000" and plain["energy_price"] == str(10**9)
@@ -119,6 +111,23 @@ def test_recorded_mainnet_frames_to_oracle_green_warehouse(spark, tmp_path):
     assert len(tt) == 4
     assert all(r["address"] == watch for r in tt)
     assert all(r["created_at"] is not None for r in tt)
+    return {r["hash"]: r for r in txs}
+
+
+def test_recorded_mainnet_frames_to_oracle_green_warehouse(spark, tmp_path):
+    fx = _load()
+    watch = fx["actors"]["watch"]
+    transport = ReplayTransport(fx, log_path=str(tmp_path / "rpc.log"))
+    provider = RpcBlockProvider(transport, chunk_size=2)
+
+    assert provider.chain_tip() == 3
+    assert provider.network_id() == 1
+    assert provider.syncing() is False
+
+    lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
+    n = P.backfill(spark, lake, provider, (watch,), chunk_size=4)
+    assert n == 4
+    by_hash = _assert_recorded_rows(lake, fx["actors"])
 
     # --- the narrowed receipt fetch: ONLY the matched CBC20 calls paid an
     # RPC (the recorded capture carries receipts for exactly those three;
@@ -131,6 +140,38 @@ def test_recorded_mainnet_frames_to_oracle_green_warehouse(spark, tmp_path):
                       if r["to_addr"] == watch}
     assert receipt_reqs == matched_hashes and len(receipt_reqs) == 3
     assert all(h.startswith("0x") for h in receipt_reqs)  # wire DATA form
+
+
+def test_recorded_mainnet_frames_through_the_live_poller(spark, tmp_path):
+    """The same recorded chain, announced head by head over the loopback
+    WebSocket server in the node's header shape (``"number": "0x0"`` ...)
+    and ingested by the head poller and the streaming tail, lands the same
+    rows as the backfill."""
+    fx = _load()
+    recorded: dict[str, dict[str, object]] = {}
+    for fr in fx["frames"]:
+        recorded.setdefault(fr["method"], {})[json.dumps(fr["params"])] = (
+            fr["response"]["result"]
+        )
+    handlers = {
+        method: (lambda params, replies=replies: replies[json.dumps(params)])
+        for method, replies in recorded.items()
+    }
+    heads = [
+        {k: v for k, v in recorded["xcb_getBlockByNumber"][
+            json.dumps([hex(n), True])].items() if k != "transactions"}
+        for n in range(4)
+    ]
+    assert [h["number"] for h in heads] == ["0x0", "0x1", "0x2", "0x3"]
+
+    with MockWsRpcServer(handlers) as srv:
+        t = WsJsonRpcTransport(url=srv.url, retries=1, retry_delay=0.1)
+        provider = RpcBlockProvider(transport=t, chunk_size=2)
+        lake = Lake(spark, str(tmp_path / "wh"), bucket_size=10)
+        _poll_then_tail(spark, tmp_path, srv, provider, lake, heads,
+                        (fx["actors"]["watch"],))
+        _assert_recorded_rows(lake, fx["actors"])
+        t.close()
 
 
 def test_replayed_pruned_height_stops_marker_not_pipeline(spark, tmp_path):

@@ -23,33 +23,37 @@ from tests.ws_server import MockWsRpcServer
 
 
 def _block(number: int, txs: int = 0) -> dict:
+    """A block reply in the node's wire shape: camelCase keys, ``0x``
+    quantities, hex u256 values, ``0x``-prefixed data. Its canonical rows
+    (``provider._normalize_wire_block``) are hash ``h{number}``, difficulty
+    ``"1"``, value ``"1"`` and so on."""
     return {
-        "number": number,
-        "hash": f"h{number}",
-        "parent_hash": f"h{number - 1}",
-        "nonce": "00",
-        "sha3_uncles": "u",
-        "logs_bloom": "b",
-        "transactions_root": "t",
-        "state_root": "s",
-        "receipts_root": "r",
-        "miner": "m",
-        "difficulty": "1",
-        "total_difficulty": "1",
-        "extra_data": "00",
-        "energy_limit": 8_000_000,
-        "energy_used": 0,
-        "timestamp": 1_700_000_000 + number * 7,
+        "number": hex(number),
+        "hash": f"0xh{number}",
+        "parentHash": f"0xh{number - 1}",
+        "nonce": "0x00",
+        "sha3Uncles": "0xu",
+        "logsBloom": "0xb",
+        "transactionsRoot": "0xt",
+        "stateRoot": "0xs",
+        "receiptsRoot": "0xr",
+        "miner": "0xm",
+        "difficulty": "0x1",
+        "totalDifficulty": "0x1",
+        "extraData": "0x00",
+        "energyLimit": hex(8_000_000),
+        "energyUsed": "0x0",
+        "timestamp": hex(1_700_000_000 + number * 7),
         "transactions": [
             {
-                "hash": f"tx{number}_{i}",
-                "nonce": "0",
-                "transaction_index": i,
-                "from": "a" * 44,
-                "to": "b" * 44,
-                "value": "1",
-                "energy": "21000",
-                "energy_price": "10",
+                "hash": f"0xtx{number}_{i}",
+                "nonce": "0x0",
+                "transactionIndex": hex(i),
+                "from": "0x" + "a" * 44,
+                "to": "0x" + "b" * 44,
+                "value": "0x1",
+                "energy": hex(21000),
+                "energyPrice": "0xa",
                 "input": "0x",
             }
             for i in range(txs)
@@ -121,7 +125,7 @@ def test_subscribe_blocks_yields_pushed_heads():
         srv.push_head(_block(100))
         srv.push_head(_block(101))
         c.join(5)
-        assert [h["number"] for h in got] == [100, 101]
+        assert [h["number"] for h in got] == ["0x64", "0x65"]
         t.close()
 
 
@@ -180,7 +184,7 @@ def test_subscription_survives_idle_timeout():
         time.sleep(1.0)  # several idle timeouts pass
         srv.push_head(_block(7))
         c.join(5)
-        assert [h["number"] for h in got] == [7]
+        assert [h["number"] for h in got] == ["0x7"]
         t.close()
 
 
@@ -211,7 +215,7 @@ def test_subscription_resubscribes_after_drop():
         assert len(srv._sub_ids) == 2
         srv.push_head(_block(6))
         c.join(5)
-        assert [h["number"] for h in got] == [5, 6]
+        assert [h["number"] for h in got] == ["0x5", "0x6"]
         t.close()
 
 

@@ -2,8 +2,10 @@
 
 Speaks just enough RFC 6455 to exercise the client: Upgrade handshake,
 masked-frame decode (client frames must be masked), unmasked text replies,
-and server-initiated subscription pushes. ``refuse_first`` makes the first
-N TCP connections fail before the handshake, to drive the retry policy.
+and server-initiated subscription pushes. A handler that raises is
+answered with a JSON-RPC error reply, as a node answers a request it
+cannot serve. ``refuse_first`` makes the first N TCP connections fail
+before the handshake, to drive the retry policy.
 """
 
 from __future__ import annotations
@@ -187,17 +189,22 @@ class MockWsRpcServer:
             self._sub_ids.append(sub_id)
             result = sub_id
         elif method in self.handlers:
-            result = self.handlers[method](params)
+            try:
+                result = self.handlers[method](params)
+            except Exception as e:  # noqa: BLE001 — a handler's failure is the node's error reply
+                self._send_error(conn, rid, -32000, f"{method}: {e!r}")
+                return
         else:
-            self._send_text(
-                conn,
-                json.dumps(
-                    {"jsonrpc": "2.0", "id": rid,
-                     "error": {"code": -32601, "message": f"no method {method}"}}
-                ),
-            )
+            self._send_error(conn, rid, -32601, f"no method {method}")
             return
         self._send_text(conn, json.dumps({"jsonrpc": "2.0", "id": rid, "result": result}))
+
+    def _send_error(self, conn: socket.socket, rid, code: int, message: str) -> None:
+        self._send_text(
+            conn,
+            json.dumps({"jsonrpc": "2.0", "id": rid,
+                        "error": {"code": code, "message": message}}),
+        )
 
     def push_raw_text(self, text: str) -> None:
         """Push an arbitrary text frame (malformed-JSON probes)."""
@@ -210,19 +217,19 @@ class MockWsRpcServer:
         self._conn_ready.wait(5)
         self._conn.sendall(data)
 
-    def push_subscription_params(self, params, namespace: str = "xcb") -> None:
+    def push_subscription_params(self, params) -> None:
         """Push a subscription notification with ARBITRARY params (probes
         for non-dict params / missing or non-dict result)."""
         self._conn_ready.wait(5)
         self._send_text(
             self._conn,
             json.dumps(
-                {"jsonrpc": "2.0", "method": f"{namespace}_subscription",
+                {"jsonrpc": "2.0", "method": "xcb_subscription",
                  "params": params}
             ),
         )
 
-    def push_head(self, header: dict, namespace: str = "xcb") -> None:
+    def push_head(self, header: dict) -> None:
         """Push a newHeads notification to the connected client."""
         self._conn_ready.wait(5)
         self._send_text(
@@ -230,7 +237,7 @@ class MockWsRpcServer:
             json.dumps(
                 {
                     "jsonrpc": "2.0",
-                    "method": f"{namespace}_subscription",
+                    "method": "xcb_subscription",
                     "params": {"subscription": self._sub_ids[-1], "result": header},
                 }
             ),
