@@ -258,7 +258,9 @@ class RpcBlockProvider:
                         raw = json.loads(payload)
                     except NotImplementedError:
                         raise  # env gate (no transport): never skippable
-                    except Exception:  # noqa: BLE001 — per-height skip
+                    except Exception as e:  # noqa: BLE001 — per-height skip
+                        log.warning("fetch of block %d failed (%s); skipping",
+                                    number, e)
                         continue
                     if isinstance(raw, dict):
                         norm = _normalize_wire_block(raw)

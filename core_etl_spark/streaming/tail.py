@@ -6,8 +6,9 @@ one block at a time: skip stale headers, fetch + normalize + insert, treat an
 insert PK-conflict as a reorg (clean + resync), refresh maturity. Here the
 subscription becomes a *file-based micro-batch source* — a driver-side RPC
 poller (or Kafka topic) lands raw nested block files in a directory and
-``readStream`` tails it with exactly-once checkpointing, one drop file per
-micro-batch (``maxFilesPerTrigger=1``).
+``readStream`` tails it with exactly-once checkpointing: an available-now
+drain takes one drop file per micro-batch, a live tail every drop pending
+at its trigger.
 
 A micro-batch is a handful of blocks, so the fixed cost of each Spark job
 dominates it. ``foreachBatch`` therefore makes every decision that needs no
@@ -57,15 +58,17 @@ RAW_BLOCK_DDL = (
 )
 
 
-def stream_raw_blocks(spark: SparkSession, source_dir: str) -> DataFrame:
+def stream_raw_blocks(
+    spark: SparkSession, source_dir: str, one_drop_per_batch: bool = True
+) -> DataFrame:
     """S2 — the header subscription as a file stream of raw nested blocks
-    (one parquet/json drop per poll). ``maxFilesPerTrigger=1`` mirrors the
-    reference's block-at-a-time cadence without changing semantics."""
-    return (
-        spark.readStream.schema(RAW_BLOCK_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
+    (one parquet/json drop per poll). ``one_drop_per_batch`` mirrors the
+    reference's block-at-a-time cadence without changing semantics;
+    without it a batch takes every drop pending at its trigger."""
+    reader = spark.readStream.schema(RAW_BLOCK_DDL)
+    if one_drop_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    return reader.parquet(source_dir)
 
 
 #: row identity inside one materialized micro-batch, so the driver's picks
@@ -131,7 +134,7 @@ def make_tail_batch_processor(
         # etl.rs:147-169). Everything stored at or above the fork point was
         # built on the dead branch — truncate it, then the replacement rows
         # (and any heights the batch re-delivers) flow through the normal
-        # write below; heights the batch does not carry come in the next drop.
+        # write below; heights the batch does not carry come in a later drop.
         stored = lake.block_hashes_at(
             {h for n in picked for h in (n, n - 1)}
         )
@@ -156,10 +159,11 @@ def make_tail_batch_processor(
         # fork just truncated the previous tip, or the subscription dropped
         # blocks — would advance the watermark beyond a PERMANENT hole that
         # resume can never see again. Skipped heights are not lost: the
-        # watermark stays at the gap, and every later head poller drop
-        # starts at the watermark (streaming/poller.py), so the next drop
-        # re-delivers from exactly there. A drop directory fed by other
-        # means must start its drops there too.
+        # watermark stays at the gap, and the head poller re-delivers it
+        # (streaming/poller.py): a height its fetch skipped starts its next
+        # drop, and it refetches from the watermark when that moves back or
+        # stops moving. A drop directory fed by other means must re-deliver
+        # the gap too.
         last = lake.resume_point()
         n_fresh = 0
         while last + n_fresh + 1 in picked:
@@ -193,8 +197,12 @@ def start_tail(
 
     ``trigger_interval=None`` runs available-now (drain the drops, then
     terminate — batch catch-up and tests); a live tail passes a processing
-    interval (e.g. ``"10 seconds"``) and runs until stopped."""
-    raw = stream_raw_blocks(spark, source_dir)
+    interval (e.g. ``"10 seconds"``) and runs until stopped. A live batch
+    takes every drop pending at its trigger, so heads announced faster than
+    the interval do not queue up behind it; the in-batch dedup absorbs the
+    heights two drops share."""
+    raw = stream_raw_blocks(spark, source_dir,
+                            one_drop_per_batch=trigger_interval is None)
     writer = raw.writeStream.foreachBatch(
         make_tail_batch_processor(lake, watch_contracts, receipts_for)
     ).option("checkpointLocation", checkpoint_dir)

@@ -224,13 +224,13 @@ def test_poller_skips_malformed_heads_and_keeps_going(spark, tmp_path):
         {"number": "0xa"},                  # good — drop 10..10
         {"number": "0xb"},                  # good — 11's reply is null
         {"number": 12},                     # good — 12's reply is a list
-        {"number": "13"},                   # good — drop 10..13
+        {"number": "13"},                   # good — drop 11..13
     ]
     provider = RpcBlockProvider(
         _StubTransport(heads, replies={11: None, 12: [1, 2]})
     )
     poller = HeadPoller(
-        spark, provider, _CommittedThrough(9), out, max_blocks=4
+        spark, provider, _CommittedThrough(9), out, max_heads=4
     ).start()
     poller.join(60)
     assert not poller.alive, "poller hung instead of finishing"
@@ -239,7 +239,7 @@ def test_poller_skips_malformed_heads_and_keeps_going(spark, tmp_path):
     drops = spark.read.parquet(out)
     assert len(drops.inputFiles()) == 4  # one file per head
     nums = {r.number for r in drops.select("number").collect()}
-    assert nums == {10, 13}  # every drop starts at the commit point
+    assert nums == {10, 13}  # 11 and 12 never arrive in a usable shape
 
 
 # --- tail batch processor: null header fields -------------------------------

@@ -31,6 +31,9 @@ class MockWsRpcServer:
         self.refuse_first = refuse_first
         self.connect_attempts = 0
         self._sub_ids: list[str] = []
+        #: the connection that subscribed last; heads go there, not to
+        #: whichever fetch connected since
+        self._sub_conn: socket.socket | None = None
         self._conn: socket.socket | None = None
         self._conn_ready = threading.Event()
         self._srv = socket.create_server(("127.0.0.1", 0))
@@ -187,6 +190,7 @@ class MockWsRpcServer:
         if method.endswith("_subscribe"):
             sub_id = f"0xsub{len(self._sub_ids) + 1}"
             self._sub_ids.append(sub_id)
+            self._sub_conn = conn
             result = sub_id
         elif method in self.handlers:
             try:
@@ -230,10 +234,10 @@ class MockWsRpcServer:
         )
 
     def push_head(self, header: dict) -> None:
-        """Push a newHeads notification to the connected client."""
+        """Push a newHeads notification to the subscribed client."""
         self._conn_ready.wait(5)
         self._send_text(
-            self._conn,
+            self._sub_conn,
             json.dumps(
                 {
                     "jsonrpc": "2.0",
